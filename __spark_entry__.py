@@ -70,78 +70,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.windowed_throughput(spark, "/root/testdata/sf0.001")
 
 
-# Prepared-query whitelist (caches.memo_plan): PURE-PLAN batch queries —
-# audited one by one: the function body only constructs the DataFrame
-# (plus session-cached fixture lookups); no streaming drive, no write-path
-# side effect, no build-time result computation. For these, the DataFrame
-# is built once per (application, sf_dir) and every execution still runs
-# the full job from the parquet inputs; see caches.memo_plan. Queries
-# excluded on audit: source_schema_catalog (its per-table counts ARE the
-# computation), every store_*/streaming_* (drives and write-path proofs),
-# and anything touching per-invocation scratch state. Removed round 12:
-# similarity_mmr_rerank — its body localCheckpoints the candidate pool,
-# so memoizing the built plan would pin that materialized fixture across
-# invocations (the caching the r11 verdict flagged); it now rebuilds the
-# pool every call.
-_PREPARED = {
-    "dedup_lsh_tuning",
-    "dedup_minhash_accuracy",
-    "dedup_soft_weight_ess",
-    "dedup_soft_weights",
-    "dedup_quality_canonical",
-    "dedup_decontaminated_split",
-    "dedup_prefix_jaccard_topk",
-    "dedup_prefix_jaccard_pairs",
-    "graph_partition_modularity",
-    "graph_pagerank_neardup",
-    "graph_hits_purchase",
-    "graph_bfs_reach",
-    "graph_hierarchy_rollup",
-    "similarity_semantic_dedup",
-    "similarity_ivf_recall",
-    "similarity_ivf_probe_sweep",
-    "similarity_ivfpq_ndcg",
-    "similarity_ivfpq_recall",
-    "similarity_ivfpq_topk",
-    "similarity_pq_recall",
-    "similarity_pq_topk",
-    "similarity_hybrid_rrf",
-    "similarity_retrieval_mrr_map",
-    "similarity_lsh_buckets",
-    "similarity_pca_variance",
-    "similarity_late_interaction_ivf",
-    "credstore_apply_mutations",
-    "tpch_shipmode_priority",
-    "tpch_supplier_hhi",
-    "tpch_bloom_filter_join",
-    "analytics_survival_churn",
-    "analytics_gini_concentration",
-    "analytics_cusum_changepoint",
-    "analytics_seasonal_decompose",
-    "analytics_quantile_rollup",
-    "analytics_pareto_skyline",
-    "analytics_theil_sen_trend",
-    "analytics_holt_forecast",
-    "sampling_bootstrap_ci",
-    "text_hybrid_rrf",
-    "text_clean_corpus",
-    "trade_bollinger_bands",
-    "trade_realized_vol",
-    "range_band_pricing",
-    "profile_functional_deps",
-    "profile_referential_integrity",
-    "pipeline_provider_matrix",
-}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from ssiintegrateddatapipeline_spark.caches import memo_plan
-
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         out.update(mod.QUERIES)
-    for name in _PREPARED:
-        out[name] = memo_plan(name, out[name])
     return out
 
 

@@ -329,15 +329,6 @@ def main() -> None:
         f"# warmup pass ({warm_dir}): {time.perf_counter() - t0:.1f}s",
         file=sys.stderr,
     )
-    # Cold cost of the disclosed once-per-session write-path-proof
-    # fixtures (r11 VERDICT item 1): these two drives run inside the
-    # warm-up and are memoized per (app, sf_dir), so their timed medians
-    # measure the warm sink re-read — the artifact carries the cold drive
-    # explicitly. (streaming_store_cdf re-drives per invocation since
-    # round 12 and is NOT in this list.)
-    FIXTURE_DRIVES = ["streaming_store_merge", "streaming_store_replica"]
-    fixture_cold = {n: warmup[n] for n in FIXTURE_DRIVES if n in warmup}
-
     # Median-of-3 timed runs per query (round-4 VERDICT task 6): the box
     # hosts other processes whose bursts can inflate a single timing
     # several-fold, and best-of-2 still let one clean+one noisy pair read
@@ -350,7 +341,10 @@ def main() -> None:
     # query function (run_available_now / run_foreach_batch), so for them
     # "build" contains the whole streaming execution and "exec" only
     # re-materializes the already-local result; read their split as
-    # run-vs-fetch, not plan-vs-job.
+    # run-vs-fetch, not plan-vs-job. No session memo keeps a query's
+    # plan, result, model, index or stream drive between runs, so every
+    # run redoes the query's own work; these summed medians are a
+    # regression smoke, not performance evidence (perfbench/ is the gate).
     N_RUNS = 3
     per_query: dict[str, float] = {}
     detail: dict[str, dict] = {}
@@ -474,7 +468,6 @@ def main() -> None:
         "sf": sf,
         "value": round(total, 3),
         "warmup": warmup,  # first-ever call per query (fixture builds inside)
-        "fixture_cold_s": fixture_cold,
     }
     # cache-accumulation evidence (r8-VERDICT task 2): the session's memo/
     # persist census after the full run, so growth across a ~200-query

@@ -1,24 +1,29 @@
 """Session-scoped cache registry with an explicit eviction path.
 
-The engine memoizes three kinds of session-local artifacts:
+No cache here keeps a query's own work — its plan, result, trained model,
+index or stream drive — from one call to the next; every call recomputes
+it. Six registered dicts remain, each for a stated reason:
 
-- analyzed relations (``sources/batch._LOAD_MEMO``) — metadata only;
-- ``.persist()``-ed DataFrames (``operators/dedup._PAIRS_CACHE``,
-  ``streaming/pipeline._GATE_CORPUS_CACHE``) — executor block-manager
-  memory;
-- plan-time literal tables (``functions/twophase`` offset/boundary memos)
-  — tiny driver dicts.
+- ``_EPHEMERAL`` (:func:`track`): call-scoped ``.persist()``-ed
+  intermediates behind lazily returned plans, reused inside one query and
+  held only so :func:`clear_caches` can release them;
+- ``sources/batch._LOAD_MEMO``: analyzed parquet relations (metadata, no
+  row data). It sits on the gated ``dashboard`` path, where clearing it
+  before each panel cost +23% on the mean of per-panel medians;
+- ``operators/wire._JVM_AVRO_CACHE``: whether the spark-avro jar is
+  loaded, a capability probe per application;
+- ``sources/files._RT_CACHE`` and ``streaming/pipeline._ONLINE_STAGE_CACHE``:
+  staged input files that stand in for data arriving from outside the
+  engine;
+- ``operators/store._STORE_CACHE``: the 10-table versioned fleet the
+  store queries read.
 
-All are keyed by ``(applicationId, ...)`` so a new session never sees stale
-JVM references, and all assume the keyed ``sf_dir``'s contents are
-IMMUTABLE for the life of the session (the memoized relation freezes the
-file listing). They grow per (app, sf_dir) with no automatic eviction —
-harmless in a bench run over one dataset, a slow leak in a long-lived
-session sweeping many. Call :func:`clear_caches` between datasets (bench
-runs a single sf_dir per process, so it never needs to — a multi-dataset
-loop MUST call it when switching sf_dirs or the frozen file listings go
-stale); tests/test_caches.py pins that eviction leaves no persisted RDDs
-behind.
+Entries key by ``applicationId`` so a new session never sees stale JVM
+references, and assume the keyed ``sf_dir``'s contents are IMMUTABLE for
+the life of the session (``_LOAD_MEMO`` freezes the file listing). A
+caller that sweeps several datasets in one session calls
+:func:`clear_caches` between them; tests/test_caches.py pins that eviction
+leaves no persisted RDDs behind.
 """
 
 from __future__ import annotations
@@ -102,59 +107,14 @@ def clear_caches(spark=None) -> int:
     dropped = 0
     for cache, persisted in _REGISTRY:
         if persisted:
-            for v in cache.values():
-                # a value may be one persisted DataFrame or a list of them
-                # (auxiliary persists feeding a cached result, e.g. the LSH
-                # signature table under the pair graph)
-                for df in v if isinstance(v, (list, tuple)) else (v,):
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass  # session already stopped; nothing to release
+            for df in cache.values():
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass  # session already stopped; nothing to release
         dropped += len(cache)
         cache.clear()
     return dropped
-
-
-_PLAN_MEMO: dict[tuple, object] = register({})
-
-
-def memo_plan(name: str, fn):
-    """Prepared-query reuse: build (analyze) a query's DataFrame once per
-    (application, sf_dir); repeat calls return a FRESH Dataset over the
-    memoized, already-analyzed plan (``df.select("*")``). ONLY analysis
-    is amortized — each returned Dataset carries its own QueryExecution,
-    so every execution (toPandas / noop write) re-runs the full job from
-    the parquet inputs, AQE and all; nothing about the result is cached.
-    Returning the SAME Dataset object would silently reuse AQE's
-    materialized shuffle stages across actions (measured: 5.6 s first
-    execution, 0.14 s re-execution of one object vs 2.5 s through a
-    fresh wrapper) — that is result caching, which this engine bans in
-    query paths, hence the wrapper. This is the driver-side twin of the
-    _memo_col literal-expression memo: for the plan-heavy queries
-    (iterative greedy loops, plan-time literal codebooks, multi-way
-    delta-fold lattices) eager per-transformation Catalyst analysis was
-    0.3-1.7 s of every invocation, re-derived from the same
-    deterministic inputs each time (a real client prepares such a query
-    once per session). Applied in __spark_entry__.queries() to an
-    audited whitelist of PURE-PLAN batch queries — functions whose only
-    eager work is session-cached fixture loading; queries that execute
-    work in the function body (streaming drives, write-path proofs,
-    build-time counts) stay unwrapped so their measured work is never
-    skipped."""
-    from functools import wraps
-
-    @wraps(fn)
-    def wrapped(spark, sf_dir):
-        key = (spark.sparkContext.applicationId, name, sf_dir)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df
-        # fresh Dataset + QueryExecution per call: no AQE stage reuse
-        return df.select("*")
-
-    return wrapped
 
 
 def census(spark=None) -> dict:
@@ -164,7 +124,7 @@ def census(spark=None) -> dict:
     the bench artifact itself, not just reproducible via tests.
 
     - ``memo_entries``: total entries across every registered cache dict
-      (driver-side metadata: analyzed plans, literal tables, built paths);
+      (driver-side metadata: analyzed relations, staged and built paths);
     - ``persisted_entries``: entries in persist-holding caches (each pins
       executor block-manager storage until clear_caches);
     - ``jvm_persistent_rdds``: the JVM CacheManager's live persistent-RDD

@@ -28,40 +28,17 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ssiintegrateddatapipeline_spark.caches import register
-
 # Default number of range buckets for quantile-derived bucketing. Buckets
 # only shape parallelism, never results; raise for bigger clusters.
 N_RANK_BUCKETS = 64
 
-# Offset-table / quantile-boundary memos: the offset pass is a full
-# groupBy(bucket).count() job over the input — a real scan, paid once per
-# DISTINCT bucketed plan rather than once per call (a suite re-building the
-# same query otherwise re-runs it every time; round-4 VERDICT task 2).
-# Keyed by (applicationId, DataFrame.semanticHash(), fn) and VERIFIED with
-# sameSemantics() on every hit: semanticHash is a lossy 32-bit digest of
-# the canonicalized plan, so a bare hash match is not identity — a
-# collision in a long-lived session would silently serve another query's
-# offsets (wrong ranks, no error). The memo therefore stores the bucketed
-# frame alongside the value and falls through to a recompute when the
-# exact plan comparison fails. Input immutability contract and eviction
-# path: see caches.py.
-_OFFSETS_MEMO: dict[tuple, tuple[DataFrame, object]] = register({})
-_BOUNDS_MEMO: dict[tuple, list] = register({})
 
-
-def _memoized_offset_pass(b, group_cols, aggs, fn_name, fold):
-    """Run (or reuse) an offset pass: ``b.groupBy(*group_cols).agg(*aggs)``
+def _offset_pass(b, group_cols, aggs, fn_name, fold):
+    """Run an offset pass: ``b.groupBy(*group_cols).agg(*aggs)``
     collected to the driver — one row per bucket (or bucket x group),
     bounded by construction — folded to the helper-specific offset value.
     Raises on null bucket/group values: a null has no place in the total
     order, so failing beats mis-ranking."""
-    key = (b.sparkSession.sparkContext.applicationId, b.semanticHash(), fn_name)
-    hit = _OFFSETS_MEMO.get(key)
-    if hit is not None:
-        stored, value = hit
-        if b.sameSemantics(stored):
-            return value
     rows = b.groupBy(*group_cols).agg(*aggs).collect()
     if any(any(r[c] is None for c in group_cols) for r in rows):
         raise ValueError(
@@ -69,9 +46,7 @@ def _memoized_offset_pass(b, group_cols, aggs, fn_name, fold):
             "rows — coalesce nulls into a sentinel bucket that respects the "
             "order, or filter them out"
         )
-    value = fold(rows)
-    _OFFSETS_MEMO[key] = (b, value)
-    return value
+    return fold(rows)
 
 
 def _collect_bucket_offsets(b: DataFrame, agg: Column, fn_name: str):
@@ -87,7 +62,7 @@ def _collect_bucket_offsets(b: DataFrame, agg: Column, fn_name: str):
             total += r["__n"] or 0
         return offsets, total
 
-    return _memoized_offset_pass(
+    return _offset_pass(
         b, ["__tpb"], [agg.alias("__n")], fn_name, fold
     )
 
@@ -235,7 +210,7 @@ def two_phase_prefix_max(
                 run = m
         return pre
 
-    pre = _memoized_offset_pass(
+    pre = _offset_pass(
         b, ["__tpb"], [F.max("__tpv").alias("__n")], "two_phase_prefix_max", fold
     )
     w = (
@@ -300,7 +275,7 @@ def two_phase_grouped_row_number(
             per_group_run[g] = per_group_run.get(g, 0) + r["__n"]
         return (bucket_offsets, group_offsets), run
 
-    (bucket_offsets, group_offsets), total = _memoized_offset_pass(
+    (bucket_offsets, group_offsets), total = _offset_pass(
         b,
         ["__tpb", "__tpg"],
         [F.count(F.lit(1)).alias("__n")],
@@ -369,29 +344,16 @@ def quantile_buckets(
 
     The boundaries only steer data placement — ties sit wholly inside one
     bucket and results never depend on boundary accuracy — so the sketch's
-    approximation error is harmless. For the same reason the memo needs no
-    ``sameSemantics`` verification: ANY fixed threshold list yields a
-    bucket expression monotone in ``col``, so even a (2^-32-likely) hash
-    collision serving another plan's boundaries costs only load balance,
-    never correctness. ``descending=True`` yields buckets monotone along a
-    DESC order on ``col``.
+    approximation error is harmless. ``descending=True`` yields buckets
+    monotone along a DESC order on ``col``.
     """
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        str(col),
-        n_buckets,
-        descending,
-    )
-    bounds = _BOUNDS_MEMO.get(key)
-    if bounds is None:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        row = df.agg(
-            F.percentile_approx(
-                col, F.array(*[F.lit(q) for q in qs]), 10_000
-            ).alias("b")
-        ).collect()[0]["b"]
-        bounds = _BOUNDS_MEMO[key] = sorted(set(row or []))
+    qs = [i / n_buckets for i in range(1, n_buckets)]
+    row = df.agg(
+        F.percentile_approx(
+            col, F.array(*[F.lit(q) for q in qs]), 10_000
+        ).alias("b")
+    ).collect()[0]["b"]
+    bounds = sorted(set(row or []))
     expr = F.lit(0)
     for v in bounds:
         # ascending: count of boundaries <= value; descending: count > value

@@ -84,29 +84,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped cache of the LSH pair graph: the signature+band join is
-# the expensive stage and is shared by minhash_lsh_pairs AND
-# near_dup_clusters — within one session (one bench run, one pipeline) it
-# is computed once and the persisted result reused. Keyed by application id
-# so a new session never sees a stale plan. Evicted (with unpersist) by
-# caches.clear_caches between datasets.
-from ssiintegrateddatapipeline_spark.caches import register, track
+from ssiintegrateddatapipeline_spark.caches import track
 from ssiintegrateddatapipeline_spark.sources.batch import local_frame
-
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register({}, persisted=True)
-# the persisted signature table UNDER each cached pair graph — tracked so
-# eviction releases it too (it is a separate .persist() from the pairs)
-_PAIRS_AUX: dict[tuple[str, str], list] = register({}, persisted=True)
-
-
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs (session-cached; see _PAIRS_CACHE)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        pairs, aux = _compute_minhash_lsh_pairs(spark, sf_dir)
-        _PAIRS_CACHE[key] = pairs.persist()
-        _PAIRS_AUX[key] = aux
-    return _PAIRS_CACHE[key]
 
 
 def explode_band_keys(df: DataFrame) -> DataFrame:
@@ -137,20 +116,18 @@ def explode_band_keys(df: DataFrame) -> DataFrame:
     ).select(*extra, "sig", "bk.band", "bk.key")
 
 
-def _compute_minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list]:
-    """shingle -> minhash -> band -> bucket-join: explode the 4 band keys,
-    self-join on (band, key), dedup candidate pairs, then estimate Jaccard
-    as the fraction of matching minhashes and keep pairs >= 4/8. Returns
-    (pairs, [auxiliary persisted frames]) — the caller caches the pairs and
-    tracks the auxiliaries for eviction.
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-duplicate pairs. shingle -> minhash -> band ->
+    bucket-join: explode the 4 band keys, self-join on (band, key), dedup
+    candidate pairs, then estimate Jaccard as the fraction of matching
+    minhashes and keep pairs >= 4/8. Callers that read the pairs more than
+    once persist them themselves.
 
     Signatures are persisted before the self-join: otherwise Catalyst inlines
     the (expensive) signature expression into both join branches and the band
     keys, recomputing the md5 work up to 10x.
     """
-    persisted_sigs = _signatures(spark, sf_dir).persist()
+    persisted_sigs = track(_signatures(spark, sf_dir).persist())
     a = explode_band_keys(persisted_sigs)
     b = a.select(
         F.col("doc_id").alias("doc_id_b"), F.col("sig").alias("sig_b"), "band", "key"
@@ -164,7 +141,7 @@ def _compute_minhash_lsh_pairs(
     n_match = F.size(
         F.filter(F.zip_with("sig", "sig_b", lambda x, y: x == y), lambda m: m)
     )
-    pairs = (
+    return (
         cand.withColumn("n_matching_minhashes", n_match)
         .where(F.col("n_matching_minhashes") >= NEAR_DUP_MIN_MATCHES)
         .select(
@@ -176,7 +153,6 @@ def _compute_minhash_lsh_pairs(
             ),
         )
     )
-    return pairs, [persisted_sigs]
 
 
 def near_dup_clusters(
@@ -197,10 +173,10 @@ def near_dup_clusters(
       large-star/small-star): each round is one equi-join + min-aggregate,
       convergence checked with an anti-join count.
     """
-    # reuses the session-cached (already persisted) pair graph — in a bench
-    # run that has already evaluated minhash_lsh_pairs this is a cache read
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    if pairs.count() <= max_local_pairs:
+    # one job decides the tier: at most max_local_pairs + 1 rows come back
+    local = pairs.limit(max_local_pairs + 1).collect()
+    if len(local) <= max_local_pairs:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -209,14 +185,13 @@ def near_dup_clusters(
                 x = parent[x]
             return x
 
-        for a, b in pairs.collect():
+        for a, b in local:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(doc, find(doc)) for doc in parent]
-        # pairs stays persisted: it is the shared session cache
         return local_frame(spark, rows, "doc_id long, cluster_id long")
 
     edges = track(
@@ -864,6 +839,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b")
         ).persist()
     )
+    # materialize now, so the wedge and closing joins plan against the
+    # graph's measured size rather than the band join's estimate
+    pairs.count()
     wedges = pairs.alias("p1").join(
         pairs.alias("p2"), F.col("p1.b") == F.col("p2.a")
     ).select(F.col("p1.a").alias("a"), F.col("p1.b").alias("b"), F.col("p2.b").alias("c"))
@@ -1132,7 +1110,7 @@ def cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the LSH pair graph is tiny relative to the corpus, so it
     broadcasts into two joins against the (doc_id, source) projection of
     the documents scan; the matrix agg is a hash agg on a handful of
-    source pairs. Reuses the session-cached pair graph."""
+    source pairs."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     joined = (
@@ -1302,7 +1280,7 @@ def neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     have 1, 2, 3… near-duplicates — the shape check run before trusting
     cluster-based dedup (a heavy-tailed degree histogram means a few
     templates dominate; cluster sizes and dedup savings follow from it).
-    Two hash aggregations over the (already session-cached) pair graph;
+    Two hash aggregations over the LSH pair graph;
     pure integer counts.
     """
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_id_a", "doc_id_b")

@@ -22,7 +22,7 @@ Scale notes (100 TB):
   discretized measures (cents x days) it bounds the ranked set by the
   value-domain product, independent of row count;
 - the ranking pass is the standard two-phase shape: one quantile sketch
-  job (memoized), one hash shuffle on the range bucket, bounded windows;
+  job, one hash shuffle on the range bucket, bounded windows;
 - the equivalence to the quadratic dominance definition is pinned by a
   brute-force ``NOT EXISTS`` cross-check at sf0.001 in
   tests/test_frontier.py — the oracle itself uses the window formulation

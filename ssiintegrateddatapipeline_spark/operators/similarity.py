@@ -23,10 +23,9 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ssiintegrateddatapipeline_spark.caches import register
 from ssiintegrateddatapipeline_spark.functions.text_funcs import arr_dot, arr_norm, cosine
 from ssiintegrateddatapipeline_spark.functions.topk import two_level_topk
-from ssiintegrateddatapipeline_spark.sources.batch import load_table
+from ssiintegrateddatapipeline_spark.sources.batch import load_table, local_frame
 
 TOP_K = 10
 N_QUERY_VECS = 5  # vec_id < 5 are the query set for the top-k benchmark
@@ -92,26 +91,12 @@ def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Exact ground truth shared by the retrieval-eval family (recall@k, nDCG,
-# MRR/MAP, PQ/truncation recall): |queries| x k rows, identical for every
-# eval over the same corpus. Computed once per (application, sf_dir) and
-# kept as a LOCAL relation — the same session-cache treatment as the
-# trained codebooks (_TRAINED_CACHE): the truth is the evals' FIXTURE, not
-# the operator under measurement, and at 100 TB a ground-truth set is
-# likewise computed once per corpus snapshot and reused across every
-# tuning run. Deliberately NOT df.persist(): Spark's CacheManager matches
-# semantically identical plans, so a persisted copy would silently serve
-# brute_force_topk's own (measured) invocations from cache; collecting to
-# a LocalRelation keeps the live plan live and gives the evals a
-# broadcast-sized literal input.
-_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = register({})
-
-
+# MRR/MAP, PQ/truncation recall): |queries| x k rows. Collected to a LOCAL
+# relation at build time, which gives the evals a broadcast-sized literal
+# input; every eval call computes it afresh.
 def _truth_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TRUTH_CACHE:
-        live = _brute_topk(spark, sf_dir)
-        _TRUTH_CACHE[key] = local_frame(spark, live.toPandas(), live.schema)
-    return _TRUTH_CACHE[key]
+    live = _brute_topk(spark, sf_dir)
+    return local_frame(spark, live.toPandas(), live.schema)
 
 
 MMR_LAMBDA = 0.7  # relevance weight; (1 - lambda) weights redundancy
@@ -471,25 +456,6 @@ N_CENTROIDS = 8
 N_PROBES = 4
 
 
-# Session-scoped memo for heavy literal-bearing Column expressions: a
-# Column is an immutable unresolved expression tree, so the same object can
-# be re-attached to any number of plans; rebuilding the tree per query call
-# costs hundreds of py4j round trips (measured: seconds of per-query wall
-# for the PQ/IVF expression sets). Keyed by applicationId so a restarted
-# session never sees stale JVM references.
-from ssiintegrateddatapipeline_spark.caches import register
-from ssiintegrateddatapipeline_spark.sources.batch import local_frame
-
-_COL_MEMO: dict[tuple, object] = register({})
-
-
-def _memo_col(spark: SparkSession, key: tuple, builder):
-    full = (spark.sparkContext.applicationId,) + key
-    if full not in _COL_MEMO:
-        _COL_MEMO[full] = builder()
-    return _COL_MEMO[full]
-
-
 def _dots_for(emb_col, centroids) -> "F.Column":
     """array of dot(v, c_k) for each centroid (doubles, index order).
     The codebook is ONE plan-time 2-D array literal and the K dots come
@@ -524,13 +490,12 @@ def _centroid_dots(emb_col, dim: int) -> "F.Column":
 # compute bit-identical codebooks with no round(avg(double)) tie hazard
 # (an avg within an ULP of a .xxxxxx5 tie would otherwise flip a
 # component and compound over the iterations). The oracles replay the
-# same training as SQL CTEs. Cached per (application, sf_dir): one fit
-# per session, the IVF queries then use plan-time literals as before (at
-# 100 TB the fit runs on a seeded sample; here the corpus is the sample).
+# same training as SQL CTEs. Each IVF query fits once at build time and
+# then uses the codebook as plan-time literals (at 100 TB the fit runs on
+# a seeded sample; here the corpus is the sample).
 TRAIN_STEPS = 4
 # 2^20 quantization: |sum| <= rows·2^20·max|v|, far under 2^53 exactness
 QUANT = 1 << 20
-_TRAINED_CACHE: dict[tuple[str, str], tuple[tuple[float, ...], ...]] = register({})
 
 
 def _trained_centroids(
@@ -538,9 +503,6 @@ def _trained_centroids(
 ) -> tuple[tuple[float, ...], ...]:
     if steps is None:
         steps = TRAIN_STEPS
-    key = (spark.sparkContext.applicationId, sf_dir, steps)
-    if key in _TRAINED_CACHE:
-        return _TRAINED_CACHE[key]
     dim = _embedding_dim(spark, sf_dir)
     cents = _centroid_literals(dim)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -570,22 +532,21 @@ def _trained_centroids(
         for r in means:
             nxt[r.centroid - 1][r.pos] = r.s / (r.n * float(QUANT))
         cents = tuple(tuple(c) for c in nxt)
-    _TRAINED_CACHE[key] = cents
     return cents
 
 
-def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ivf_assignments(
+    spark: SparkSession, sf_dir: str, cents: tuple | None = None
+) -> DataFrame:
     """Corpus-side IVF assignment: vec_id -> centroid (1-based argmax dot)
-    against the TRAINED codebook (see _trained_centroids)."""
+    against the TRAINED codebook (see _trained_centroids). Callers that
+    also probe with the codebook pass the ``cents`` they fitted."""
+    if cents is None:
+        cents = _trained_centroids(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    dots = _memo_col(
-        spark,
-        (sf_dir, "ivf_dots"),
-        lambda: _dots_for(
-            F.col("embedding"), _trained_centroids(spark, sf_dir)
-        ),
+    step = emb.select(
+        "vec_id", "embedding", _dots_for(F.col("embedding"), cents).alias("dots")
     )
-    step = emb.select("vec_id", "embedding", dots.alias("dots"))
     return step.select(
         "vec_id",
         "embedding",
@@ -596,20 +557,15 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe search: each query (vec_id < 5) probes its top-2 centroids,
     exact cosine reranks candidates from just those lists."""
-    assigned = ivf_assignments(spark, sf_dir)
+    cents = _trained_centroids(spark, sf_dir)
+    assigned = ivf_assignments(spark, sf_dir, cents)
     q_step = (
         load_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < N_QUERY_VECS)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _memo_col(
-                spark,
-                (sf_dir, "ivf_dots"),
-                lambda: _dots_for(
-                    F.col("embedding"), _trained_centroids(spark, sf_dir)
-                ),
-            ).alias("dots"),
+            _dots_for(F.col("embedding"), cents).alias("dots"),
         )
     )
     # top-P probe list: sort (dot, idx) structs desc, take the first P idx
@@ -876,7 +832,7 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     after scoring (narrow rows, no re-scoring), and the per-(nprobe,
     query) top-k runs through the two-level device (a window over the
     20-key grid would funnel each cell's candidates through one task at
-    corpus scale). Recall joins the session's ground-truth fixture.
+    corpus scale). Recall joins the exact ground truth.
     Cosine volume is exactly ONE plain search regardless of the grid
     (was Σp/K ~ 1.9x before round 12). The corpus side is spread before the
     cosine stage: the probe join is a BHJ (no shuffle), so without it
@@ -884,20 +840,15 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (one straggler task per row group at 30x)."""
     from ssiintegrateddatapipeline_spark.sources.batch import spread
 
-    assigned = spread(ivf_assignments(spark, sf_dir))
+    cents = _trained_centroids(spark, sf_dir)
+    assigned = spread(ivf_assignments(spark, sf_dir, cents))
     q_step = (
         load_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < N_QUERY_VECS)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _memo_col(
-                spark,
-                (sf_dir, "ivf_dots"),
-                lambda: _dots_for(
-                    F.col("embedding"), _trained_centroids(spark, sf_dir)
-                ),
-            ).alias("dots"),
+            _dots_for(F.col("embedding"), cents).alias("dots"),
         )
     )
     pairs = F.transform(
@@ -1133,7 +1084,8 @@ def late_interaction_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation; the ``in_exact_topk`` flag joins each approximate
     pick against the exact top-k so the recall cost of the blocking is
     measured in the result itself."""
-    assigned = ivf_assignments(spark, sf_dir).select(
+    cents = _trained_centroids(spark, sf_dir)
+    assigned = ivf_assignments(spark, sf_dir, cents).select(
         "vec_id",
         F.expr(f"vec_id div {LI_VECS_PER_DOC}").alias("mdoc"),
         "embedding",
@@ -1148,13 +1100,7 @@ def late_interaction_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("q_vec"),
             F.col("embedding").alias("q_emb"),
             arr_norm(F.col("embedding")).alias("n_q"),
-            _memo_col(
-                spark,
-                (sf_dir, "ivf_dots"),
-                lambda: _dots_for(
-                    F.col("embedding"), _trained_centroids(spark, sf_dir)
-                ),
-            ).alias("dots"),
+            _dots_for(F.col("embedding"), cents).alias("dots"),
         )
     )
     pairs = F.transform(
@@ -1336,7 +1282,6 @@ PQ_STEPS = 2  # Lloyd steps per sub-codebook fit
 # the quantization noise; 120 is 6% of this corpus, and at real scale the
 # ratio shrinks with corpus size while the rerank stays |Q| x shortlist.
 PQ_SHORTLIST = 12 * TOP_K
-_PQ_CACHE: dict[tuple[str, str], tuple] = register({})
 
 
 @lru_cache(maxsize=None)
@@ -1357,11 +1302,8 @@ def _pq_codebooks(
     by the oracle's CTEs. All PQ_M subspaces train in ONE Spark job per
     Lloyd step: the per-subspace (slice, assignment) pairs are built as an
     array of structs and exploded, so a step is one scan + one hash agg on
-    (subspace, centroid, pos) regardless of PQ_M. Cached per session; at
-    100 TB the fit runs on a seeded sample."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
+    (subspace, centroid, pos) regardless of PQ_M. At 100 TB the fit runs
+    on a seeded sample."""
     dim = _embedding_dim(spark, sf_dir)
     sub = dim // PQ_M
     emb = load_table(spark, sf_dir, "embeddings").select("embedding")
@@ -1399,63 +1341,50 @@ def _pq_codebooks(
         for r in rows:
             nxt[r.m][r.centroid - 1][r.pos] = r.qsum / (r.n * float(QUANT))
         books = [tuple(tuple(c) for c in book) for book in nxt]
-    out = (tuple(books), sub)
-    _PQ_CACHE[key] = out
-    return out
+    return tuple(books), sub
 
 
-# The PQ INDEX: every corpus vector's (IVF cell, PQ codes, L2 norm), the
-# structure a PQ index IS — in production it's encoded once at ingest and
-# stored as a table (the ~8-byte rows the ADC scan reads instead of raw
-# embeddings); recomputing it per search would be a full brute-force-cost
-# scan and defeat the index. Session-persisted per (application, sf_dir),
-# same treatment as the minhash pair graph (_PAIRS_CACHE); clear_caches
-# unpersists. Searches project the columns they need (pq_topk ignores the
-# cell, ivfpq_topk joins on it).
-_PQ_INDEX_CACHE: dict[tuple[str, str], DataFrame] = register({}, persisted=True)
+def _l2_norm(emb) -> "F.Column":
+    """Exact L2 norm of a float-array column, folded in doubles."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(F.transform(emb, lambda x: x.cast("double")), lambda x: x * x),
+            F.lit(0.0),
+            lambda s, x: s + x,
+        )
+    )
 
 
-def _pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_INDEX_CACHE:
+def _pq_luts(books, sub: int) -> "F.Column":
+    """Per-subspace dots of ``embedding`` against each sub-codebook: the
+    ADC lookup tables of a query vector."""
+    return F.array(
+        *[
+            _dots_for(F.slice("embedding", m * sub + 1, sub), books[m])
+            for m in range(PQ_M)
+        ]
+    )
 
-        def _build_norm():
-            return F.sqrt(
-                F.aggregate(
-                    F.transform(
-                        F.transform("embedding", lambda x: x.cast("double")),
-                        lambda x: x * x,
-                    ),
-                    F.lit(0.0),
-                    lambda s, x: s + x,
-                )
-            )
 
-        def _build_codes():
-            books, sub = _pq_codebooks(spark, sf_dir)
-            return F.array(
-                *[
-                    F.array_position(
-                        (
-                            d := _dots_for(
-                                F.slice("embedding", m * sub + 1, sub), books[m]
-                            )
-                        ),
-                        F.array_max(d),
-                    ).cast("int")
-                    for m in range(PQ_M)
-                ]
-            )
-
-        df = ivf_assignments(spark, sf_dir).select(
-            "vec_id",
-            "centroid",
-            _memo_col(spark, (sf_dir, "pq_codes"), _build_codes).alias("codes"),
-            _memo_col(spark, (sf_dir, "pq_norm"), _build_norm).alias("norm_v"),
-        ).persist()
-        df.count()  # encode once, eagerly — searches read code rows only
-        _PQ_INDEX_CACHE[key] = df
-    return _PQ_INDEX_CACHE[key]
+def _pq_encode(df: DataFrame, books, sub: int) -> DataFrame:
+    """The PQ INDEX rows: ``df`` plus each vector's PQ_M codes (1-based
+    argmax per subspace) and its L2 norm. The ground truth ranks by
+    cosine, so ADC divides the table-sum dot by the stored norms —
+    without them, dot-ranking and cosine-ranking disagree wherever vector
+    norms vary (the standard PQ-for-cosine fix). In production the index
+    is encoded once at ingest and stored as a table (the ~8-byte rows the
+    ADC scan reads instead of raw embeddings); here each search encodes
+    it in its own plan."""
+    codes = F.array(
+        *[
+            F.array_position(
+                (d := _dots_for(F.slice("embedding", m * sub + 1, sub), books[m])),
+                F.array_max(d),
+            ).cast("int")
+            for m in range(PQ_M)
+        ]
+    )
+    return df.select("*", codes.alias("codes"), _l2_norm("embedding").alias("norm_v"))
 
 
 def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1468,51 +1397,12 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     this reads ~8 bytes/vector instead of raw embeddings (~32x smaller
     I/O); raw vectors are fetched for |Q| x PQ_SHORTLIST rows only."""
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def _build_norm():
-        # exact L2 norm stored next to the codes (1 float per vector): the
-        # ground truth ranks by cosine, so ADC divides the table-sum dot
-        # by the stored norms — without this, dot-ranking vs cosine-
-        # ranking disagree wherever vector norms vary (the standard
-        # PQ-for-cosine fix)
-        return F.sqrt(
-            F.aggregate(
-                F.transform(
-                    F.transform("embedding", lambda x: x.cast("double")),
-                    lambda x: x * x,
-                ),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-        )
-
-    def _build_codes():
-        books, sub = _pq_codebooks(spark, sf_dir)
-        return F.array(
-            *[
-                F.array_position(
-                    (d := _dots_for(F.slice("embedding", m * sub + 1, sub), books[m])),
-                    F.array_max(d),
-                ).cast("int")
-                for m in range(PQ_M)
-            ]
-        )
-
-    def _build_luts():
-        books, sub = _pq_codebooks(spark, sf_dir)
-        return F.array(
-            *[
-                _dots_for(F.slice("embedding", m * sub + 1, sub), books[m])
-                for m in range(PQ_M)
-            ]
-        )
-
-    norm = _memo_col(spark, (sf_dir, "pq_norm"), _build_norm)
-    codes = _pq_index(spark, sf_dir).select("vec_id", "codes", "norm_v")
+    books, sub = _pq_codebooks(spark, sf_dir)
+    codes = _pq_encode(emb, books, sub).select("vec_id", "codes", "norm_v")
     q = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"),
-        _memo_col(spark, (sf_dir, "pq_luts"), _build_luts).alias("luts"),
-        norm.alias("norm_q"),
+        _pq_luts(books, sub).alias("luts"),
+        _l2_norm("embedding").alias("norm_q"),
     )
     approx = F.element_at(F.element_at("luts", 1), F.element_at("codes", 1))
     for m in range(1, PQ_M):
@@ -1575,60 +1465,22 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two scale savings compose multiplicatively: the probe reads
     ~nprobe/K of the corpus (IVF) and what it reads is ~8-byte code rows
     instead of raw vectors (PQ); raw embeddings are fetched only for the
-    |Q| x shortlist rerank. All memo columns (cell dots, codes, LUTs,
-    norms) are shared with ivf_topk / pq_topk via the session cache, so
-    the three indexes price one fit."""
+    |Q| x shortlist rerank. The IVF codebook and the PQ sub-codebooks
+    are each fitted once per call and enter the plan as literals."""
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def _build_norm():
-        return F.sqrt(
-            F.aggregate(
-                F.transform(
-                    F.transform("embedding", lambda x: x.cast("double")),
-                    lambda x: x * x,
-                ),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-        )
-
-    def _build_codes():
-        books, sub = _pq_codebooks(spark, sf_dir)
-        return F.array(
-            *[
-                F.array_position(
-                    (d := _dots_for(F.slice("embedding", m * sub + 1, sub), books[m])),
-                    F.array_max(d),
-                ).cast("int")
-                for m in range(PQ_M)
-            ]
-        )
-
-    def _build_luts():
-        books, sub = _pq_codebooks(spark, sf_dir)
-        return F.array(
-            *[
-                _dots_for(F.slice("embedding", m * sub + 1, sub), books[m])
-                for m in range(PQ_M)
-            ]
-        )
-
-    norm = _memo_col(spark, (sf_dir, "pq_norm"), _build_norm)
-    # corpus row: cell id + codes + norm — read from the session-persisted
-    # PQ index (encode-once; see _pq_index)
-    codes = _pq_index(spark, sf_dir)
+    cents = _trained_centroids(spark, sf_dir)
+    books, sub = _pq_codebooks(spark, sf_dir)
+    # corpus row: cell id + codes + norm
+    codes = _pq_encode(ivf_assignments(spark, sf_dir, cents), books, sub).select(
+        "vec_id", "centroid", "codes", "norm_v"
+    )
 
     # query side: probe list (top-P cells) + ADC lookup tables + norm
-    dots = _memo_col(
-        spark,
-        (sf_dir, "ivf_dots"),
-        lambda: _dots_for(F.col("embedding"), _trained_centroids(spark, sf_dir)),
-    )
     q_step = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"),
-        _memo_col(spark, (sf_dir, "pq_luts"), _build_luts).alias("luts"),
-        norm.alias("norm_q"),
-        dots.alias("dots"),
+        _pq_luts(books, sub).alias("luts"),
+        _l2_norm("embedding").alias("norm_q"),
+        _dots_for(F.col("embedding"), cents).alias("dots"),
     )
     pairs = F.transform(
         F.sequence(F.lit(1), F.lit(N_CENTROIDS)),
@@ -1724,7 +1576,7 @@ def ivfpq_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors in the wrong ORDER (graded relevance = k+1-exact_rank,
     log2-position discount, normalized by the ideal DCG).
 
-    Both sides are the k-row-per-query outputs of the cached index
+    Both sides are the k-row-per-query outputs of the index
     pipelines, so the eval is a broadcast-scale join; the ideal DCG is
     computed as the SAME in-engine fold expression in Spark and the
     oracle (not a Python literal), so the one libm surface (log2) runs
@@ -1817,7 +1669,7 @@ def kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # persist the quantized vectors: every one of the K argmax actions
     # scans this frame — cached, each round reads columnar ints instead
-    # of re-reading parquet and re-quantizing (the module's pq/ivf pattern)
+    # of re-reading parquet and re-quantizing
     base = _track(
         emb.select(
             "vec_id",

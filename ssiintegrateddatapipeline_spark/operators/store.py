@@ -71,8 +71,7 @@ _N_FILES = 8  # target live-file count per table at every SF (multi-file
 
 _STORE_CACHE: dict[tuple, dict] = register({})
 # two concurrent FIRST callers must not build the 10-table fleet twice
-# (r10 verdict: the check-then-build was unsynchronized — wasteful, not
-# incorrect, since the drives with once-only semantics have own locks)
+# (wasteful, not incorrect)
 _STORE_BUILD_LOCK = threading.Lock()
 
 

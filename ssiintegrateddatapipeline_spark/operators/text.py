@@ -26,7 +26,7 @@ from ssiintegrateddatapipeline_spark.functions.twophase import (
     two_phase_row_number,
 )
 from ssiintegrateddatapipeline_spark.sources.batch import load_table, spread
-from ssiintegrateddatapipeline_spark.caches import register, track
+from ssiintegrateddatapipeline_spark.caches import track
 
 # tiny stopword marker lists for the n-gram language heuristic
 LANG_MARKERS = {
@@ -1226,7 +1226,6 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BPE vocabulary training: number of merge steps and the end-of-word marker
 BPE_MERGES = 8
 BPE_EOW = "$"  # not in the corpus alphabet (lowercase words)
-_BPE_MERGE_CACHE: dict[str, list[tuple[str, str, int]]] = register({})
 
 
 def _bpe_word_symbols(word_col):
@@ -1257,11 +1256,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
     through one hash agg). Each step is a distributed pair-count with
     map-side combine; only the 1-row argmax crosses to the driver (the
     k-means-centroid device), and the merge application is a per-row
-    string map. Cached per (session, sf_dir) like the IVF codebooks.
+    string map.
     """
-    key = sf_dir
-    if key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(tokens(F.col("text"))).alias("word"))
@@ -1302,7 +1298,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
         steps_cached.append(words)
     for cached in steps_cached:
         cached.unpersist()
-    _BPE_MERGE_CACHE[key] = merges
     return merges
 
 

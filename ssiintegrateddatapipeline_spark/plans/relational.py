@@ -658,52 +658,40 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ssiintegrateddatapipeline_spark.caches import register as _register_cache
-
-# (applicationId, sf_dir) -> (lineitem_table, orders_table); the bucketed
-# write is paid once per session per dataset, every later call reuses the
-# catalog tables (bench's median-of-3 sees the write on run 1 only).
-_BUCKETED_MEMO: dict = _register_cache({})
 _BUCKETS = 16
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """The bucketed catalog tables for ``sf_dir``, written on first use.
+    The bucketed layout is immutable for an immutable sf_dir, so tables
+    already in this session's catalog are adopted, never rewritten."""
     import hashlib
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED_MEMO:
-        from ssiintegrateddatapipeline_spark.sources.sinks import write_bucketed
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    li_name, o_name = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
+    if spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name):
+        return li_name, o_name
+    from ssiintegrateddatapipeline_spark.sources.sinks import write_bucketed
 
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        li_name, o_name = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
-        # memo miss with the tables still in THIS session's catalog (e.g.
-        # clear_caches ran between datasets): adopt them — the bucketed
-        # layout is immutable for an immutable sf_dir, never rewrite
-        if spark.catalog.tableExists(li_name) and spark.catalog.tableExists(
-            o_name
-        ):
-            _BUCKETED_MEMO[key] = (li_name, o_name)
-            return _BUCKETED_MEMO[key]
-        # stale-location handling (orphaned warehouse dirs from interrupted
-        # processes) lives inside write_bucketed itself
-        write_bucketed(
-            _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            li_name,
-            bucket_cols=("l_orderkey",),
-            n_buckets=_BUCKETS,
-            sort_cols=("l_orderkey",),
-        )
-        write_bucketed(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
-            o_name,
-            bucket_cols=("o_orderkey",),
-            n_buckets=_BUCKETS,
-            sort_cols=("o_orderkey",),
-        )
-        _BUCKETED_MEMO[key] = (li_name, o_name)
-    return _BUCKETED_MEMO[key]
+    # stale-location handling (orphaned warehouse dirs from interrupted
+    # processes) lives inside write_bucketed itself
+    write_bucketed(
+        _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount"
+        ),
+        li_name,
+        bucket_cols=("l_orderkey",),
+        n_buckets=_BUCKETS,
+        sort_cols=("l_orderkey",),
+    )
+    write_bucketed(
+        _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
+        o_name,
+        bucket_cols=("o_orderkey",),
+        n_buckets=_BUCKETS,
+        sort_cols=("o_orderkey",),
+    )
+    return li_name, o_name
 
 
 def bucketed_revenue_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,8 +711,7 @@ def bucketed_revenue_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the one-time bucketed write is itself a single shuffle of each
     table — amortized across every subsequent join/aggregation on the key
-    (the memo holds table NAMES, not data; re-running after cache
-    eviction just re-derives the names and reuses the catalog tables)."""
+    (later calls find the tables in the session catalog and reuse them)."""
     li_name, o_name = _bucketed_tables(spark, sf_dir)
     li = spark.table(li_name)
     orders = spark.table(o_name)

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import atexit
 import glob
-import threading
 from contextlib import contextmanager
 import os
 import shutil
@@ -1363,12 +1362,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ssiintegrateddatapipeline_spark.caches import register
-
-# evicted (with unpersist) by caches.clear_caches between datasets
-_GATE_CORPUS_CACHE: dict[tuple[str, str], DataFrame] = register({}, persisted=True)
-
-
 def _gate_signatures(df: DataFrame) -> DataFrame:
     """(doc_id, text, *extra) -> (doc_id, *extra, sig): the SAME JVM
     shingle->minhash expressions as batch dedup, no UDF. Extra columns
@@ -1399,26 +1392,17 @@ def _gate_band_keys(df: DataFrame) -> DataFrame:
 
 
 def _gate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The EXISTING-corpus LSH bucket index (even doc_ids): static across
-    micro-batches and across gate runs in a session — persisted once, like
-    dedup._PAIRS_CACHE; a production gate maintains this as an indexed
-    table."""
+    """The EXISTING-corpus LSH bucket index (even doc_ids), static across
+    micro-batches; a production gate maintains this as an indexed table."""
     from ssiintegrateddatapipeline_spark.sources.batch import load_table
 
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    if ckey not in _GATE_CORPUS_CACHE:
-        _GATE_CORPUS_CACHE[ckey] = (
-            _gate_band_keys(
-                _gate_signatures(
-                    load_table(spark, sf_dir, "documents")
-                    .where(F.col("doc_id") % 2 == 0)
-                    .select("doc_id", "text")
-                )
-            )
-            .select("band", "key", F.col("sig").alias("ref_sig"))
-            .persist()
+    return _gate_band_keys(
+        _gate_signatures(
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") % 2 == 0)
+            .select("doc_id", "text")
         )
-    return _GATE_CORPUS_CACHE[ckey]
+    ).select("band", "key", F.col("sig").alias("ref_sig"))
 
 
 def _sig_match_count():
@@ -1430,18 +1414,25 @@ def _sig_match_count():
     )
 
 
-def _gate_probe(spark: SparkSession, sf_dir: str, arrivals: DataFrame) -> DataFrame:
-    """Stream-static LEFT join of arrival band rows against the corpus
-    bucket index; emits per-band-row (doc_id, *extra, hit, n_match)."""
+def _run_gate(spark: SparkSession, sf_dir: str, arrivals: DataFrame, decide) -> DataFrame:
+    """Drive a gate: stream-static LEFT join of arrival band rows against
+    the corpus bucket index, emitting per-band-row (doc_id, *extra, hit,
+    n_match) to ``decide`` per micro-batch. The index is persisted for the
+    drive (every micro-batch probes it) and released when it returns."""
     banded = _gate_band_keys(_gate_signatures(arrivals))
     extra = [c for c in banded.columns if c not in ("doc_id", "sig", "band", "key")]
     n_match = _sig_match_count()
-    return banded.join(_gate_corpus(spark, sf_dir), ["band", "key"], "left").select(
+    corpus = _gate_corpus(spark, sf_dir).persist()
+    probed = banded.join(corpus, ["band", "key"], "left").select(
         "doc_id",
         *extra,
         F.when(F.col("ref_sig").isNotNull(), 1).otherwise(0).alias("hit"),
         F.when(F.col("ref_sig").isNotNull(), n_match).alias("n_match"),
     )
+    try:
+        return run_foreach_batch(probed, decide)
+    finally:
+        corpus.unpersist()
 
 
 def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1473,13 +1464,11 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         NEAR_DUP_MIN_MATCHES,
     )
 
-    probed = _gate_probe(
-        spark,
-        sf_dir,
+    arrivals = (
         documents_stream(spark, sf_dir)
         .where(F.col("doc_id") % 2 == 1)
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id")),
+        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
     )
 
     def decide(batch: DataFrame) -> DataFrame:
@@ -1500,7 +1489,7 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_foreach_batch(probed, decide)
+    return _run_gate(spark, sf_dir, arrivals, decide)
 
 
 # documents scoring below this are blocked at ingest (chosen to split the
@@ -1545,8 +1534,6 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
     )
-    probed = _gate_probe(spark, sf_dir, arrivals)
-
     def decide(batch: DataFrame) -> DataFrame:
         tally = batch.groupBy("doc_id").agg(
             F.first("quality_score").alias("quality_score"),
@@ -1573,19 +1560,17 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (reason == "ok").alias("admitted"),
         )
 
-    return run_foreach_batch(probed, decide)
+    return _run_gate(spark, sf_dir, arrivals, decide)
 
 
 ONLINE_DEDUP_BATCHES = 4
 
-# staged arrival files are immutable per (app, sf_dir): memoized so repeat
-# calls skip the 4 little staging writes (the MUTATING index dir is always
-# fresh per call)
-_ONLINE_STAGE_CACHE: dict[tuple[str, str, int], str] = register({})
+# staged arrival files are immutable per (app, sf_dir): they stand in for
+# data arriving from outside the engine, so they are staged once per
+# session (the MUTATING index dir is always fresh per call)
+from ssiintegrateddatapipeline_spark.caches import register
 
-# immutable corpus seed index per (app, sf_dir) — run growth lives in
-# per-run delta dirs, so every run shares one seed write
-_ONLINE_BASE_CACHE: dict[tuple[str, str], str] = register({})
+_ONLINE_STAGE_CACHE: dict[tuple[str, str, int], str] = register({})
 
 
 def _online_batch_of(n: int):
@@ -1608,8 +1593,8 @@ LAST_RUN_BATCH_MS: list = []
 def _online_stage(spark: SparkSession, sf_dir: str, n: int) -> str:
     """Stage arrivals: one parquet FILE per micro-batch, strictly
     increasing mtimes so the file source replays them in batch order.
-    Memoized per (app, sf_dir, n) — the staged files are immutable for a
-    given batch split, but a different ``n`` partitions the corpus into
+    Staged once per (app, sf_dir, n) — the staged files are immutable for
+    a given batch split, but a different ``n`` partitions the corpus into
     different files, so it must key the cache too.
 
     The staged frames are PRE-BANDED (doc_id, band, key, sig): the
@@ -1668,19 +1653,11 @@ def _online_dedup_drive(
     )
 
     n = ONLINE_DEDUP_BATCHES
-    # the corpus seed is IMMUTABLE (all growth goes to the run's delta
-    # dirs), so one parquet write per (app, sf_dir) serves every run —
-    # re-seeding per run cost ~1 s of each bench invocation
-    bkey = (spark.sparkContext.applicationId, sf_dir)
-    base_dir = _ONLINE_BASE_CACHE.get(bkey)
-    if base_dir is None or not os.path.exists(os.path.join(base_dir, "_SUCCESS")):
-        base_dir = os.path.join(
-            tempfile.mkdtemp(dir=_session_ckpt_root()), "index_base"
-        )
-        # the SAME frame the other gates persist; reused from the session
-        # cache
+    # the corpus seed is IMMUTABLE (all growth goes to the delta dirs); a
+    # resumed run keeps the seed it already wrote
+    base_dir = os.path.join(run_root, "index_base")
+    if not os.path.exists(os.path.join(base_dir, "_SUCCESS")):
         _gate_corpus(spark, sf_dir).write.mode("overwrite").parquet(base_dir)
-        _ONLINE_BASE_CACHE[bkey] = base_dir
     delta_root = os.path.join(run_root, "index_delta")
     spool = os.path.join(run_root, "decisions")
     ckpt = os.path.join(run_root, "ckpt")
@@ -1906,7 +1883,7 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _trained_centroids,
     )
 
-    cents = _trained_centroids(spark, sf_dir)  # session-memoized batch train
+    cents = _trained_centroids(spark, sf_dir)  # batch train, once per call
     stream = embeddings_stream(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, F.col("vec_id")
     )
@@ -2079,13 +2056,6 @@ def streaming_store_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # staged micro-batch count for the streaming MERGE sink drive
 STORE_MERGE_BATCHES = 4
 
-# (built-table path, drive progress) per (app, sf_dir) — the drive is
-# deterministic, so one table serves every later read (the online-dedup
-# staging precedent). The lock keeps two concurrent first callers from
-# driving the same build twice (wasteful, though never incorrect).
-_STORE_MERGE_CACHE: dict[tuple, tuple[str, dict | None]] = register({})
-_STORE_MERGE_LOCK = threading.Lock()
-
 
 def store_merge_batch(spark: SparkSession, table_path: str, bdf: DataFrame, bid: int) -> None:
     """One micro-batch of the durable MERGE sink: fold the batch to
@@ -2127,63 +2097,47 @@ def streaming_store_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     here enforced by the commit log itself (link(2) makes the version slot
     exclusive). Scale: one bounded groupBy per micro-batch + a stats-pruned
     file rewrite; no streaming state store at all."""
-    from ssiintegrateddatapipeline_spark.operators.store import (
-        _WHEN_MATCHED,
-        _batch_state,
-    )
     from ssiintegrateddatapipeline_spark.sources.versioned import VersionedTable
 
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    with _STORE_MERGE_LOCK:
-        if ckey not in _STORE_MERGE_CACHE:
-            ev = load_table(spark, sf_dir, "events")
-            max_id = ev.agg(F.max("event_id")).collect()[0][0]  # bounded: 1 scalar
-            n = STORE_MERGE_BATCHES
-            cuts = [max_id * k // n for k in range(n)] + [max_id + 1]
-            stage_root = tempfile.mkdtemp(dir=_session_ckpt_root())
-            arrivals = os.path.join(stage_root, "arrivals")
-            os.makedirs(arrivals)
-            base_t = 1_600_000_000
-            for k in range(n):
-                part_dir = os.path.join(stage_root, f"w{k}")
-                (
-                    ev.where(
-                        (F.col("event_id") >= cuts[k])
-                        & (F.col("event_id") < cuts[k + 1])
-                    )
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(part_dir)
-                )
-                (pf,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-                dst = os.path.join(arrivals, f"b{k}.parquet")
-                shutil.move(pf, dst)
-                os.utime(dst, (base_t + k, base_t + k))
-            table_path = os.path.join(stage_root, "table")
-
-            def _merge(bdf: DataFrame, bid: int) -> None:
-                store_merge_batch(spark, table_path, bdf, bid)
-
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(arrivals)
-                .writeStream.foreachBatch(_merge)
-                .option("checkpointLocation", os.path.join(stage_root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+    ev = load_table(spark, sf_dir, "events")
+    max_id = ev.agg(F.max("event_id")).collect()[0][0]  # bounded: 1 scalar
+    n = STORE_MERGE_BATCHES
+    cuts = [max_id * k // n for k in range(n)] + [max_id + 1]
+    stage_root = tempfile.mkdtemp(dir=_session_ckpt_root())
+    arrivals = os.path.join(stage_root, "arrivals")
+    os.makedirs(arrivals)
+    base_t = 1_600_000_000
+    for k in range(n):
+        part_dir = os.path.join(stage_root, f"w{k}")
+        (
+            ev.where(
+                (F.col("event_id") >= cuts[k])
+                & (F.col("event_id") < cuts[k + 1])
             )
-            q.awaitTermination()
-            drive_prog = q.lastProgress
-            _STORE_MERGE_CACHE[ckey] = (
-                table_path,
-                dict(drive_prog) if drive_prog else None,
-            )
-    table_path, prog = _STORE_MERGE_CACHE[ckey]
-    # publish the DRIVE's progress (zero state operators) even on memoized
-    # reads, so state-bound checks never see a stale predecessor's counters
-    global LAST_QUERY_PROGRESS
-    LAST_QUERY_PROGRESS = prog
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(part_dir)
+        )
+        (pf,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
+        dst = os.path.join(arrivals, f"b{k}.parquet")
+        shutil.move(pf, dst)
+        os.utime(dst, (base_t + k, base_t + k))
+    table_path = os.path.join(stage_root, "table")
+
+    def _merge(bdf: DataFrame, bid: int) -> None:
+        store_merge_batch(spark, table_path, bdf, bid)
+
+    q = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(arrivals)
+        .writeStream.foreachBatch(_merge)
+        .option("checkpointLocation", os.path.join(stage_root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    _record_progress(q)
     t = VersionedTable(spark, table_path)
     return t.snapshot().withColumn(
         "table_version", F.lit(t.latest_version()).cast("int")
@@ -2214,13 +2168,8 @@ def streaming_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint like any stream, so a downstream consumer resumes
     mid-history exactly-once.
 
-    The drive runs PER INVOCATION (round 12): the r11 per-(app, sf_dir)
-    memo moved the measured CDF consumption into the bench's untimed
-    warm-up, which the r11 judge ruled caching of measured work. Every
-    call now streams the full version history into a fresh scratch sink
-    (the merge/replica write-path proofs keep their disclosed
-    once-per-session doctrine; their cold drive time is reported by the
-    bench separately)."""
+    The drive runs per invocation: every call streams the full version
+    history into a fresh scratch sink."""
     import time
 
     from ssiintegrateddatapipeline_spark.operators.store import _built_store
@@ -2250,7 +2199,7 @@ def streaming_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per version) and the sink append would otherwise each re-run
         # the batch's file-pair diff from scratch (§5 — cache only what
         # is reused; measured ~2x the per-batch cost without it)
-        bdf.persist()
+        bdf = bdf.persist()
         try:
             vs = [
                 r[0]
@@ -2293,12 +2242,6 @@ def streaming_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return VersionedTable(spark, sink_path).snapshot()
 
 
-# (replica table path, drive progress) per (app, sf_dir); the lock keeps
-# two concurrent first callers from driving the same stream twice
-_STORE_REPLICA_CACHE: dict[tuple, tuple[str, dict | None]] = register({})
-_STORE_REPLICA_LOCK = threading.Lock()
-
-
 def streaming_store_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC REPLICATION: a downstream replica table maintained purely from
     the source's streaming change feed — the composition of the two
@@ -2328,93 +2271,81 @@ def streaming_store_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _built_store(spark, sf_dir)["cdcsrc"]
     latest = src.latest_version()
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    with _STORE_REPLICA_LOCK:
-        if ckey not in _STORE_REPLICA_CACHE:
-            ensure_registered(spark, VersionedCdfDataSource)
-            rp = os.path.join(
-                tempfile.mkdtemp(dir=_session_ckpt_root()), "replica"
-            )
-            data_cols = src.snapshot(version=1).columns
-            seen: set[int] = set()
+    ensure_registered(spark, VersionedCdfDataSource)
+    rp = os.path.join(tempfile.mkdtemp(dir=_session_ckpt_root()), "replica")
+    data_cols = src.snapshot(version=1).columns
+    seen: set[int] = set()
 
-            def _apply(bdf: DataFrame, _bid: int) -> None:
-                # a batch may carry SEVERAL source versions (the catch-up
-                # batch after start covers the whole backlog — round-11
-                # restart-safe pacing): apply them IN VERSION ORDER so an
-                # insert+update+delete of the same key lands correctly,
-                # preserving the clean 1:1 commit mapping. The batch is
-                # cached once; each version's slice counts once (r10
-                # verdict: no repeated ups.count()).
-                bdf = bdf.persist()
-                try:
-                    vs = sorted(
-                        r[0]
-                        for r in bdf.select("_commit_version")
-                        .distinct()
-                        .collect()  # bounded: one row per version
+    def _apply(bdf: DataFrame, _bid: int) -> None:
+        # a batch may carry SEVERAL source versions (the catch-up
+        # batch after start covers the whole backlog — round-11
+        # restart-safe pacing): apply them IN VERSION ORDER so an
+        # insert+update+delete of the same key lands correctly,
+        # preserving the clean 1:1 commit mapping. The batch is
+        # cached once; each version's slice counts once (r10
+        # verdict: no repeated ups.count()).
+        bdf = bdf.persist()
+        try:
+            vs = sorted(
+                r[0]
+                for r in bdf.select("_commit_version")
+                .distinct()
+                .collect()  # bounded: one row per version
+            )
+            for ver in vs:
+                part = bdf.where(F.col("_commit_version") == ver)
+                ups = part.where(
+                    F.col("_change_type") != "delete"
+                ).select(*data_cols)
+                n_ups = ups.count()  # the ONE count for this slice
+                dels = [
+                    r[0]
+                    for r in part.where(
+                        F.col("_change_type") == "delete"
                     )
-                    for ver in vs:
-                        part = bdf.where(F.col("_commit_version") == ver)
-                        ups = part.where(
-                            F.col("_change_type") != "delete"
-                        ).select(*data_cols)
-                        n_ups = ups.count()  # the ONE count for this slice
-                        dels = [
-                            r[0]
-                            for r in part.where(
-                                F.col("_change_type") == "delete"
-                            )
-                            .select("user_id")
-                            .collect()  # bounded: the commit's delete count
-                        ]
-                        t = VersionedTable(spark, rp)
-                        if t.latest_version() == 0:
-                            if n_ups:
-                                VersionedTable.create(
-                                    spark, rp, ups, key="user_id"
-                                )
-                        elif n_ups:
-                            t.merge_into(ups, key="user_id")  # post-image
-                        if dels and t.latest_version() > 0:
-                            t.delete_where(
-                                F.col("user_id").isin(dels), key="user_id"
-                            )
-                        seen.add(ver)
-                finally:
-                    bdf.unpersist()
+                    .select("user_id")
+                    .collect()  # bounded: the commit's delete count
+                ]
+                t = VersionedTable(spark, rp)
+                if t.latest_version() == 0:
+                    if n_ups:
+                        VersionedTable.create(
+                            spark, rp, ups, key="user_id"
+                        )
+                elif n_ups:
+                    t.merge_into(ups, key="user_id")  # post-image
+                if dels and t.latest_version() > 0:
+                    t.delete_where(
+                        F.col("user_id").isin(dels), key="user_id"
+                    )
+                seen.add(ver)
+        finally:
+            bdf.unpersist()
 
-            q = (
-                spark.readStream.format("versioned_cdf")
-                .option("path", src.path)
-                .load()
-                .writeStream.foreachBatch(_apply)
-                .option(
-                    "checkpointLocation",
-                    tempfile.mkdtemp(dir=_session_ckpt_root()),
-                )
-                .trigger(processingTime="0 seconds")
-                .start()
-            )
-            deadline = time.time() + 120
-            while time.time() < deadline and latest not in seen:
-                time.sleep(0.2)
-            q.stop()
-            q.awaitTermination()
-            _record_progress(q)
-            _capture_stream_plan(q, "source")
-            if latest not in seen:
-                raise TimeoutError(
-                    "CDC replica drain incomplete after 120s — refusing "
-                    "to return a partial replica"
-                )
-            prog = q.lastProgress
-            _STORE_REPLICA_CACHE[ckey] = (rp, dict(prog) if prog else None)
-    rp, prog = _STORE_REPLICA_CACHE[ckey]
-    # publish the DRIVE's progress (zero state operators) even on memoized
-    # reads, so state-bound checks never see a stale predecessor's counters
-    global LAST_QUERY_PROGRESS
-    LAST_QUERY_PROGRESS = prog
+    q = (
+        spark.readStream.format("versioned_cdf")
+        .option("path", src.path)
+        .load()
+        .writeStream.foreachBatch(_apply)
+        .option(
+            "checkpointLocation",
+            tempfile.mkdtemp(dir=_session_ckpt_root()),
+        )
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    deadline = time.time() + 120
+    while time.time() < deadline and latest not in seen:
+        time.sleep(0.2)
+    q.stop()
+    q.awaitTermination()
+    _record_progress(q)
+    _capture_stream_plan(q, "source")
+    if latest not in seen:
+        raise TimeoutError(
+            "CDC replica drain incomplete after 120s — refusing "
+            "to return a partial replica"
+        )
     t = VersionedTable(spark, rp)
     return t.snapshot().withColumn(
         "replica_versions", F.lit(t.latest_version()).cast("int")

@@ -1,22 +1,24 @@
-"""Cache lifecycle (round-4 VERDICT task 4): the session-scoped memos
-(`sources/batch._LOAD_MEMO`, `operators/dedup._PAIRS_CACHE`,
-`streaming/pipeline._GATE_CORPUS_CACHE`, `functions/twophase` memos) must
-have an eviction path — a long-lived session sweeping many datasets must
-not accumulate persisted DataFrames. `caches.clear_caches` is that path;
+"""Cache lifecycle: the session caches (`sources/batch._LOAD_MEMO` and the
+call-scoped persists enrolled through `caches.track`) must have an
+eviction path — a long-lived session sweeping many datasets must not
+accumulate persisted DataFrames. `caches.clear_caches` is that path;
 these tests pin that a two-dataset sweep returns the persistent-RDD census
-to its pre-sweep baseline after eviction (no growth), and that the
-two-phase offset memo keyed on the semantic hash never confuses two
-same-schema inputs."""
+to its pre-sweep baseline after eviction (no growth), and that only the
+six documented caches are registered: no session memo keeps a query's
+plan, result, model, index or stream drive."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
+from ssiintegrateddatapipeline_spark import caches
 from ssiintegrateddatapipeline_spark.caches import clear_caches
 from ssiintegrateddatapipeline_spark.functions import twophase
-from ssiintegrateddatapipeline_spark.operators import dedup
-from ssiintegrateddatapipeline_spark.sources import batch
+from ssiintegrateddatapipeline_spark.operators import dedup, store, wire
+from ssiintegrateddatapipeline_spark.sources import batch, files
+from ssiintegrateddatapipeline_spark.streaming import pipeline
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -29,7 +31,7 @@ def _n_persisted(spark) -> int:
 def _sweep(spark, sf_dirs) -> None:
     for sf in sf_dirs:
         batch.load_table(spark, sf, "documents")
-        dedup.minhash_lsh_pairs(spark, sf).count()  # materialize the persist
+        dedup.minhash_lsh_pairs(spark, sf).count()  # materialize the sig persist
     # call-scoped persists (caches.track): signature/candidate frames that
     # back returned plans and previously leaked one persist per invocation
     dedup.simhash_near_dup_pairs(spark, SF_A).count()
@@ -41,19 +43,18 @@ def test_two_dataset_sweep_shows_no_growth_after_eviction(spark):
     baseline = _n_persisted(spark)
 
     _sweep(spark, [SF_A, SF_B])
-    assert _n_persisted(spark) > baseline, "sweep should persist pair graphs"
-    assert len(dedup._PAIRS_CACHE) >= 2 and len(batch._LOAD_MEMO) >= 2
+    assert _n_persisted(spark) > baseline, "sweep should persist signatures"
+    assert len(batch._LOAD_MEMO) >= 2
 
     dropped = clear_caches(spark)
     assert dropped > 0
     assert _n_persisted(spark) == baseline
-    assert not dedup._PAIRS_CACHE and not dedup._PAIRS_AUX
 
     # second sweep + eviction: still no growth (the leak the VERDICT named)
     _sweep(spark, [SF_A, SF_B])
     clear_caches(spark)
     assert _n_persisted(spark) == baseline
-    assert not batch._LOAD_MEMO and not twophase._OFFSETS_MEMO
+    assert not batch._LOAD_MEMO
 
 
 def test_load_memo_rebuilds_after_eviction(spark):
@@ -63,10 +64,9 @@ def test_load_memo_rebuilds_after_eviction(spark):
     assert a.schema == b.schema and b.count() > 0
 
 
-def test_twophase_memo_distinguishes_same_schema_inputs(spark):
-    """The offset memo keys on the semantic hash of the bucketed plan —
-    two LocalRelations with identical schemas but different data must get
-    separate offset tables (a plan-string key would collide here)."""
+def test_twophase_ranks_same_schema_inputs_independently(spark):
+    """Two LocalRelations with identical schemas but different data must
+    get their own offset tables and ranks."""
     df1 = spark.createDataFrame([(1, 5), (2, 3)], "id int, value int")
     df2 = spark.createDataFrame([(1, 7), (2, 9), (3, 1)], "id int, value int")
     r1, n1 = twophase.two_phase_row_number(
@@ -78,17 +78,6 @@ def test_twophase_memo_distinguishes_same_schema_inputs(spark):
     assert (n1, n2) == (2, 3)
     assert {r.id: r.global_pos for r in r1.collect()} == {2: 1, 1: 2}
     assert {r.id: r.global_pos for r in r2.collect()} == {3: 1, 1: 2, 2: 3}
-
-
-def test_twophase_memo_hits_on_repeat(spark):
-    df = spark.createDataFrame([(i, i % 7) for i in range(50)], "id int, v int")
-    twophase.two_phase_row_number(df, F.col("v"), [F.col("v"), F.col("id")])
-    before = dict(twophase._OFFSETS_MEMO)
-    ranked, total = twophase.two_phase_row_number(
-        df, F.col("v"), [F.col("v"), F.col("id")]
-    )
-    assert total == 50 and twophase._OFFSETS_MEMO == before  # no new entry
-    assert ranked.count() == 50
 
 
 def test_twophase_null_bucket_raises(spark):
@@ -157,34 +146,22 @@ def test_built_store_builds_once_under_concurrent_first_callers(spark):
     assert all(o is outs[0] for o in outs)
 
 
-def test_memo_plan_builds_once_but_never_shares_a_dataset(spark):
-    """r11: memo_plan amortizes Catalyst analysis (the underlying build
-    runs once per (app, sf_dir)) but must hand each caller a FRESH
-    Dataset — re-collecting one shared Dataset object silently reuses
-    AQE's materialized shuffle stages, i.e. cached results. Assert the
-    build count, the object freshness, and value equality."""
-    from ssiintegrateddatapipeline_spark.caches import _PLAN_MEMO, memo_plan
+def test_registry_holds_only_the_kept_caches():
+    """Exactly six registered caches remain (see the caches module
+    docstring for why each stays), and queries() hands out each module's
+    own callable — no prepared-plan wrapper between caller and query."""
+    kept = [
+        caches._EPHEMERAL,
+        batch._LOAD_MEMO,
+        wire._JVM_AVRO_CACHE,
+        files._RT_CACHE,
+        pipeline._ONLINE_STAGE_CACHE,
+        store._STORE_CACHE,
+    ]
+    registered = [cache for cache, _ in caches._REGISTRY]
+    assert sorted(map(id, registered)) == sorted(map(id, kept))
 
-    from pyspark.sql import functions as F
-
-    calls = []
-
-    def build(s, sf_dir):
-        calls.append(sf_dir)
-        return (
-            s.range(0, 100)
-            .groupBy((F.col("id") % 7).alias("k"))
-            .count()
-        )
-
-    wrapped = memo_plan("_test_memo_plan_q", build)
-    a = wrapped(spark, SF_A)
-    b = wrapped(spark, SF_A)
-    assert len(calls) == 1  # analyzed once
-    assert a is not b  # fresh Dataset per call -> fresh QueryExecution
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb and len(ra) == 7
-    _PLAN_MEMO.pop(
-        (spark.sparkContext.applicationId, "_test_memo_plan_q", SF_A), None
-    )
+    q = entry_mod.queries()
+    for mod in entry_mod._MODULES:
+        for name, fn in mod.QUERIES.items():
+            assert q[name] is fn, name

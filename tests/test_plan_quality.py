@@ -371,7 +371,7 @@ def test_credstore_claims_filter_pushes_to_scan(spark, sf_dir):
 
 
 def test_ivf_trained_codebook_is_plan_time_literal(spark, sf_dir):
-    """Training happens once per session driver-side; the per-row query
+    """Training happens driver-side at build time; the per-row query
     plan must contain only literal centroid arrays (whole-stage codegen,
     no Python, no extra scan of embeddings for the codebook)."""
     plan = _formatted(_QUERIES["similarity_ivf_topk"](spark, sf_dir))
@@ -469,7 +469,7 @@ def test_wire_roundtrip_jvm_path_has_no_python_stage(spark, sf_dir):
 
 
 def test_pq_codebooks_are_plan_time_literals(spark, sf_dir):
-    """PQ sub-codebooks train once per session driver-side; the search
+    """PQ sub-codebooks train driver-side at build time; the search
     plan must be literal lookup tables + a broadcast of the tiny query
     side over the code scan — no Python stage, no extra embedding scans
     for the codebooks (2 scans: corpus codes + query side)."""
@@ -659,19 +659,22 @@ def test_no_unbounded_single_partition_window(qname, spark, sf_dir):
     assert not bad, f"{qname}: Window fed by unbounded SinglePartition: {bad}"
 
 
-def test_contract_bucketed_join_plan_and_memo(spark, sf_dir):
+def test_contract_bucketed_join_plan_and_memo(spark, sf_dir, monkeypatch):
     """The tpch_bucketed_join CONTRACT query (not just the ad-hoc demo
     above) must execute its fact join as a sort-merge join with no
     Exchange on either input, and the second build must reuse the
-    memoized catalog tables instead of re-writing them."""
+    session's catalog tables instead of re-writing them."""
     from ssiintegrateddatapipeline_spark.plans import relational
+    from ssiintegrateddatapipeline_spark.sources import sinks
 
     df = relational.bucketed_revenue_by_month(spark, sf_dir)
     plan = _executed_plan(df)
     assert "SortMergeJoin" in plan, plan
     join_part = plan.split("SortMergeJoin")[-1]
     assert "Exchange" not in join_part, plan
-    key = (spark.sparkContext.applicationId, sf_dir)
-    names = relational._BUCKETED_MEMO[key]
+    writes = []
+    monkeypatch.setattr(
+        sinks, "write_bucketed", lambda df, name, **kw: writes.append(name)
+    )
     relational.bucketed_revenue_by_month(spark, sf_dir)
-    assert relational._BUCKETED_MEMO[key] is names
+    assert writes == []
