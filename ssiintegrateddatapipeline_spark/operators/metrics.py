@@ -10,8 +10,9 @@ the streaming K4 sink.
 
 Histogram semantics are exactly Prometheus's: cumulative `le` buckets
 (value <= le counts, +Inf == _count), plus _sum and _count rows — the same
-shape histogram_quantile() consumes, and what analytics._histogram_quantile
-interpolates over.
+shape histogram_quantile() consumes. The bucket rows come from
+analytics.bucket_rows; the quantile panels read the same counts in wide form
+(analytics.bucket_counts) through analytics.histogram_quantile_sql.
 """
 
 from __future__ import annotations
@@ -19,8 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ssiintegrateddatapipeline_spark.sources.batch import load_table
-from ssiintegrateddatapipeline_spark.sources.batch import local_frame
+from ssiintegrateddatapipeline_spark.operators.analytics import (
+    bucket_counts,
+    bucket_rows,
+    histogram_quantile_sql,
+    sql_double,
+)
+from ssiintegrateddatapipeline_spark.sources.batch import load_table, local_frame
 
 METRICS_SCHEMA_COLS = ("metric", "label", "le", "value")
 
@@ -53,14 +59,9 @@ def histogram(
     df: DataFrame, name: str, label_col: str, value_col: str, buckets: list[float]
 ) -> DataFrame:
     """A2: histogram family — cumulative le buckets + _sum + _count."""
-    spark = df.sparkSession
-    bucket_df = local_frame(spark, [(b,) for b in buckets], "le double")
     labeled = df.select(F.col(label_col).alias("label"), F.col(value_col).alias("v"))
-    cum = (
-        labeled.join(F.broadcast(bucket_df), F.col("v") <= F.col("le"))
-        .groupBy("label", "le")
-        .agg(F.count("*").cast("double").alias("value"))
-        .select(F.lit(f"{name}_bucket").alias("metric"), "label", "le", "value")
+    cum = bucket_rows(labeled, ["label"], "v", buckets).selectExpr(
+        f"'{name}_bucket' AS metric", "label", "le", "CAST(cum_count AS DOUBLE) AS value"
     )
     sums = labeled.groupBy("label").agg(
         F.round(F.sum("v"), 4).alias("value"), F.count("*").cast("double").alias("cnt")
@@ -152,54 +153,23 @@ def histogram_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-retained `le` rows (each kept row already counts everything <= le)
     — which is precisely why Prometheus histograms are cumulative: any
     coarsening is a filter, never a re-scan. One corpus pass builds the
-    fine cumulative counts; everything downstream operates on
-    |buckets|-row aggregates through the shared
-    ``quantile_from_bucket_counts`` interpolation.
+    fine cumulative counts; each grid's p95 is the shared
+    ``analytics.histogram_quantile_sql`` over its subset of those columns.
     """
     ev = load_table(spark, sf_dir, "events")
-    obs = ev.select(F.col("value").alias("v"))
-    # ONE corpus scan, ZERO joins: all cumulative bucket counts plus the
-    # grand total fold as conditional sums in a single aggregate; the
-    # <= |buckets|+1 result values re-emit as a local relation so the fine
-    # and coarse grid branches don't each re-run the scan lineage
-    # (the bucket-join + per-branch recompute form measured 2x this).
-    row = obs.agg(
-        F.count(F.lit(1)).alias("total"),
-        *[
-            F.sum((F.col("v") <= F.lit(b)).cast("long")).alias(f"c{i}")
-            for i, b in enumerate(VALUE_BUCKETS)
-        ],
-    ).collect()[0]
-    cum_by_le = {b: row[f"c{i}"] for i, b in enumerate(VALUE_BUCKETS)}
-    target = 0.95 * row["total"]
-
-    def _round6(x: float) -> float:
-        # the engines round() half-AWAY-from-zero; Python's round() is
-        # half-to-even. Snap to the 12-decimal grid first (kills float
-        # fuzz around a tie), then round half-up — the repo's standard
-        # tie-breaking device, here on the driver.
-        import math
-
-        return math.floor(round(x, 12) * 1e6 + 0.5) / 1e6
-
-    def _interp(buckets: list[float]) -> tuple:
-        # same interpolation as analytics.quantile_from_bucket_counts,
-        # evaluated over the collected (bounded: |buckets|-row) table —
-        # driver arithmetic on exact integers, no per-grid Spark stages
-        prev_le, prev_cum = 0.0, 0
-        for b in buckets:
-            c = cum_by_le[b]
-            if c >= target:
-                q = prev_le + (b - prev_le) * (target - prev_cum) / (c - prev_cum)
-                return len(buckets), _round6(q)
-            prev_le, prev_cum = b, c
-        return len(buckets), _round6(float(buckets[-1]))
-
-    nf, qf = _interp(VALUE_BUCKETS)
-    nc, qc = _interp(COARSE_BUCKETS)
-    return local_frame(spark, 
-        [("fine", nf, qf), ("coarse", nc, qc)],
-        "grid string, n_buckets int, p95 double",
+    # ONE corpus scan, ZERO joins, kept eager: the fine counts and total
+    # come back as one driver row (a lazy keyless aggregate would add a
+    # single-partition exchange), re-emitted as a local relation that both
+    # grids' quantile expressions read
+    row = bucket_counts(ev, [], "value", VALUE_BUCKETS).collect()[0]
+    coarse = [f"c{VALUE_BUCKETS.index(b)}" for b in COARSE_BUCKETS]
+    return local_frame(
+        spark, [row], ", ".join(f"{c} long" for c in row.asDict())
+    ).selectExpr(
+        f"stack(2, 'fine', {len(VALUE_BUCKETS)}, "
+        f"{histogram_quantile_sql(0.95, VALUE_BUCKETS)}, 'coarse', "
+        f"{len(COARSE_BUCKETS)}, {histogram_quantile_sql(0.95, COARSE_BUCKETS, coarse)})"
+        " AS (grid, n_buckets, p95)"
     )
 
 
@@ -218,9 +188,9 @@ def burn_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact shape: integer error/total counts per aligned 5m bucket (one
     map-side-combined groupBy of the event scan), hour totals as a
-    second tiny rollup of the 5m table (never a rescan) broadcast back
-    onto it. Burn rates are exact-integer ratios over the budget
-    constant, rounded at 6."""
+    window sum over the 5m table's hour partition (never a rescan, no
+    second rollup, no join). Burn rates are exact-integer ratios over
+    the budget constant, rounded at 6."""
     ev = load_table(spark, sf_dir, "events")
     by5 = (
         ev.select(
@@ -236,26 +206,17 @@ def burn_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def burn_report(by5: DataFrame) -> DataFrame:
     """Shared tail of the batch query and its streaming twin: hour gate
     + page flags over a (w5, n_5m, err_5m) bucket table."""
-    byh = (
-        by5.select(F.expr("w5 div 12").alias("wh"), "n_5m", "err_5m")
-        .groupBy("wh")
-        .agg(F.sum("n_5m").alias("n_1h"), F.sum("err_5m").alias("err_1h"))
-    )
-    j = by5.join(
-        F.broadcast(byh), F.expr("w5 div 12") == F.col("wh")
-    )
-    burn_s = F.col("err_5m") / F.col("n_5m") / SLO_ERROR_BUDGET
-    burn_l = F.col("err_1h") / F.col("n_1h") / SLO_ERROR_BUDGET
-    return j.select(
-        F.timestamp_seconds(F.col("w5") * 300).alias("window_start"),
+    hour = "OVER (PARTITION BY w5 div 12)"
+    return by5.selectExpr(
+        "w5", "n_5m", "err_5m", f"sum(n_5m) {hour} AS n_1h", f"sum(err_5m) {hour} AS err_1h"
+    ).selectExpr(
+        "timestamp_seconds(w5 * 300) AS window_start",
         "n_5m",
         "err_5m",
-        F.round(burn_s, 6).alias("burn_5m"),
-        F.round(burn_l, 6).alias("burn_1h"),
-        (
-            (F.round(burn_s, 6) >= BURN_ALERT)
-            & (F.round(burn_l, 6) >= BURN_ALERT)
-        ).alias("page"),
+        f"round(err_5m / n_5m / {sql_double(SLO_ERROR_BUDGET)}, 6) AS burn_5m",
+        f"round(err_1h / n_1h / {sql_double(SLO_ERROR_BUDGET)}, 6) AS burn_1h",
+    ).selectExpr(
+        "*", f"burn_5m >= {sql_double(BURN_ALERT)} AND burn_1h >= {sql_double(BURN_ALERT)} AS page"
     )
 
 

@@ -43,7 +43,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ssiintegrateddatapipeline_spark.sources.batch import load_table
 from ssiintegrateddatapipeline_spark.operators.analytics import (
+    P95_BUCKETS,
     _P95_ORACLE as _BATCH_P95_ORACLE,
+    bucket_counts,
+    bucket_rows,
+    histogram_quantile_sql,
 )
 
 
@@ -122,16 +126,9 @@ def last_seen_plan(stream: DataFrame) -> DataFrame:
 
 
 def payload_hist_plan(stream: DataFrame, buckets: list[float]) -> DataFrame:
-    """Q5 streaming form: cumulative bucket counts via a stream-static
-    broadcast join against the literal bucket table."""
-    spark = stream.sparkSession
-    bucket_df = local_frame(spark, [(b,) for b in buckets], "le double")
-    return (
-        stream.withColumn("payload_bytes", F.octet_length("props"))
-        .join(F.broadcast(bucket_df), F.col("payload_bytes") <= F.col("le"))
-        .groupBy("le")
-        .agg(F.count("*").alias("cum_count"))
-    )
+    """Q5 streaming form: cumulative bucket counts, one state row per le,
+    through the batch panel's long bucket primitive (no bucket table)."""
+    return bucket_rows(stream, [], "octet_length(props)", buckets)
 
 
 def cms_grid_plan(stream: DataFrame) -> DataFrame:
@@ -160,17 +157,12 @@ def cms_grid_plan(stream: DataFrame) -> DataFrame:
 
 
 def value_hist_plan(stream: DataFrame, buckets: list[float]) -> DataFrame:
-    """Labeled cumulative bucket counts over the stream — the state the
-    streaming job maintains is |labels| x |buckets| counters, NEVER raw
+    """Labeled cumulative bucket counts over the stream, in the wide
+    primitive's form (``c{i}`` per bucket) — the state the streaming job
+    maintains is one row of |buckets| counters per label, NEVER raw
     observations; quantiles are derived at query time (the Prometheus
     architecture, and the only p95 formulation with O(1) streaming state)."""
-    spark = stream.sparkSession
-    bucket_df = local_frame(spark, [(b,) for b in buckets], "le double")
-    return (
-        stream.join(F.broadcast(bucket_df), F.col("value") <= F.col("le"))
-        .groupBy("event_type", "le")
-        .agg(F.count("*").alias("cum"))
-    )
+    return bucket_counts(stream, ["event_type"], "value", buckets)
 
 
 def streaming_p95_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,23 +170,13 @@ def streaming_p95_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     job maintains histogram counters; `histogram_quantile` interpolates at
     read time. The oracle is the batch p95 — the two-phase split must be
     lossless."""
-    from ssiintegrateddatapipeline_spark.operators.analytics import (
-        quantile_from_bucket_counts,
-    )
-
-    buckets = [1.0, 2.0, 5.0, 10.0, 25.0, 50.0, 100.0, 150.0, 200.0, 300.0]
-    # the +Inf bucket is the Prometheus _count: totals come from it, so
-    # observations above the last finite bound still weigh into the target
+    # the +Inf bucket is the Prometheus _count: the target comes from it,
+    # so observations above the last finite bound still weigh in
     hist = run_available_now(
-        value_hist_plan(events_stream(spark, sf_dir), buckets + [float("inf")])
+        value_hist_plan(events_stream(spark, sf_dir), P95_BUCKETS + [float("inf")])
     )
-    totals = (
-        hist.where(F.col("le") == float("inf"))
-        .select("event_type", F.col("cum").alias("total"))
-    )
-    return quantile_from_bucket_counts(
-        hist.where(F.col("le") != float("inf")), totals, "event_type", buckets, 0.95
-    )
+    p95 = histogram_quantile_sql(0.95, P95_BUCKETS, total=f"c{len(P95_BUCKETS)}")
+    return hist.selectExpr("event_type", f"{p95} AS p95")
 
 
 TOPK_USERS = 10
@@ -1228,7 +1210,7 @@ def streaming_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_payload_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ssiintegrateddatapipeline_spark.operators.analytics import PAYLOAD_BUCKETS
 
-    # state = one row per (type, bucket) pair: O(1) state partitions
+    # state = one row per le bucket: O(1) state partitions
     return run_available_now(
         payload_hist_plan(events_stream(spark, sf_dir), PAYLOAD_BUCKETS),
         state_partitions=2,

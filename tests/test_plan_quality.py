@@ -5,7 +5,10 @@ column pruning must drop unused columns from the parquet read."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -31,10 +34,14 @@ def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
     assert pushed and any("l_shipdate" in line for line in pushed), pushed
 
 
-def test_histogram_quantile_all_broadcast(spark, sf_dir):
-    plan = _executed_plan(_QUERIES["analytics_p95_histogram"](spark, sf_dir))
-    assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 3
+@pytest.mark.parametrize("name", ["analytics_p95_histogram", "analytics_p95_windowed"])
+def test_histogram_quantile_one_aggregate(spark, sf_dir, name):
+    """The p95 panels are one aggregation over conditional bucket counts:
+    no join of any kind, one shuffle, no Python stage."""
+    plan = _executed_plan(_QUERIES[name](spark, sf_dir))
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert plan.count("Exchange ") == 1, plan
+    assert not re.search(r"Python|InPandas|ArrowEval", plan), plan
 
 
 def test_star_joins_broadcast_dims(spark, sf_dir):

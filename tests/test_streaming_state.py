@@ -95,7 +95,8 @@ _STATE_BOUNDS = {
     "streaming_static_enrich": lambda s, n: 2 * n + 16,  # segments x types
     "streaming_last_seen": lambda s, n: 2 * s["n_types"] + 8,
     "streaming_payload_hist": lambda s, n: 2 * len(PAYLOAD_BUCKETS) + 8,
-    "streaming_p95_value": lambda s, n: 2 * s["n_types"] * 12 + 8,
+    # wide bucket counters: one state row per type
+    "streaming_p95_value": lambda s, n: s["n_types"] + 8,
     "streaming_cms_grid": lambda s, n: CMS_DEPTH * CMS_WIDTH + 8,
     "streaming_sign_verify": lambda s, n: 8,  # 5 symbols
     # append-only CDF source, no aggregation: zero state rows (per-batch
