@@ -337,6 +337,9 @@ def test_cdf_stream_resumes_from_checkpoint(spark, tmp_path):
             if any(v == until_version for _, _, v in got):
                 break
             time.sleep(0.2)
+        # emit runs before the batch's commit-log entry is written; a stop
+        # in between leaves the batch uncommitted, and the restart replays it
+        q.processAllAvailable()
         q.stop()
         q.awaitTermination()
         return sorted(got)
