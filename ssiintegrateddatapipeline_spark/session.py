@@ -8,10 +8,14 @@ the same settings are what you'd want on a real cluster:
 - Arrow enabled (fast Pandas UDF / toPandas path)
 - auto broadcast threshold left at default; dimension tables are broadcast
   explicitly where we know they're small (see operators/).
-- Python workers forked from ``worker_daemon``, which stops each task from
-  re-reading Spark's zip archives (0.14-0.22 s per Python node per task)
-- the engine root exported on ``PYTHONPATH``, so workers import the engine
-  whatever the driver's working directory
+- the engine root exported on ``PYTHONPATH``, so local-mode workers import
+  the engine whatever the driver's working directory
+- on ``local*`` masters only, Python workers forked from ``worker_daemon``,
+  which stops each task from re-reading Spark's zip archives (0.14-0.22 s per
+  Python node per task). Spark starts the daemon before any task puts
+  ``--py-files`` on ``sys.path``, so on a cluster it needs the engine
+  installed on every executor: set ``spark.python.daemon.module`` to
+  ``DAEMON_MODULE`` through ``extra_conf`` there.
 """
 
 from __future__ import annotations
@@ -104,8 +108,9 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", DAEMON_MODULE)
     )
+    if master.startswith("local"):  # workers inherit the exported PYTHONPATH
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1,9 +1,12 @@
 """PySpark worker daemon that does not re-read zip archives on every task.
 
 ``session.get_spark`` sets Spark's ``spark.python.daemon.module`` to this
-module. It runs ``pyspark.daemon.manager()`` unchanged, after making
-``zipimport.zipimporter.invalidate_caches`` a no-op; the forked workers
-inherit that.
+module on local masters. It runs ``pyspark.daemon.manager()`` unchanged, after
+making ``zipimport.zipimporter.invalidate_caches`` a no-op; the forked workers
+inherit that. As a submodule it first runs the package ``__init__``, so the
+daemon (and each forked worker) also has ``caches``, ``session`` and
+``pyspark.sql`` loaded, and ``session``'s import-time ``PYTHONPATH`` export
+and protobuf-shim probe have run; pandas and pyarrow are not loaded.
 
 Why: every Python task (pandas UDF, ``mapInPandas``, Python data-source read)
 starts in ``pyspark.worker_util.setup_spark_files``, which ends with

@@ -4,6 +4,7 @@
 - ``importlib.invalidate_caches()`` at the start of every task re-reads no
   zip archive (``worker_daemon``).
 - Files shipped with ``addPyFile`` after the workers are warm still import.
+- Only local masters get the daemon: elsewhere executors may lack the engine.
 """
 
 from __future__ import annotations
@@ -103,3 +104,17 @@ def test_py_files_added_after_warm_workers_import(spark, tmp_path):
 
     rows = spark.range(4, numPartitions=1).mapInPandas(use, "py string, zip string").collect()
     assert [tuple(r) for r in rows] == [("py", "zip")]
+
+
+def test_daemon_module_set_on_local_masters_only(monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from ssiintegrateddatapipeline_spark.session import DAEMON_MODULE, get_spark
+
+    # the options get_spark would start a session with, without starting one
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    key = "spark.python.daemon.module"
+    assert get_spark(master="local[2]")[key] == DAEMON_MODULE
+    assert key not in get_spark(master="spark://host:7077")
+    opted_in = get_spark(master="spark://host:7077", extra_conf={key: DAEMON_MODULE})
+    assert opted_in[key] == DAEMON_MODULE

@@ -9,7 +9,7 @@ Then, inside one worker task, it times ``importlib.invalidate_caches()``, the
 call every Python task makes in ``pyspark.worker_util.setup_spark_files``, and
 counts the zip importers in the worker's importer cache.
 
-Usage: python tools/python_stage_floor.py [--rounds N] [--daemon MODULE]
+Usage: python tools/python_stage_floor.py [--daemon MODULE]
 
 ``--daemon pyspark.daemon`` runs Spark's stock worker daemon instead of the
 engine's ``worker_daemon``, for a before/after comparison in one tree.
@@ -26,6 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHAIN = (0, 1, 2, 4)
+ROUNDS = 7
 
 
 def chain(spark, k: int):
@@ -59,7 +60,6 @@ def invalidate_probe(batches):
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--rounds", type=int, default=7)
     ap.add_argument("--daemon", default=None, help="spark.python.daemon.module")
     args = ap.parse_args()
 
@@ -76,12 +76,12 @@ def main() -> None:
     for k in CHAIN:  # warm the workers and the JIT off the clock
         wall(chain(spark, k))
     times: dict[int, list[float]] = {k: [] for k in CHAIN}
-    for r in range(args.rounds):
+    for r in range(ROUNDS):
         for k in CHAIN[r % len(CHAIN):] + CHAIN[: r % len(CHAIN)]:
             times[k].append(wall(chain(spark, k)))
 
     base = statistics.median(times[0])
-    print(f"\n{args.rounds} interleaved rounds, median wall per chain length:\n")
+    print(f"\n{ROUNDS} interleaved rounds, median wall per chain length:\n")
     print("| k no-op stages | median s | over k=0 s | per stage s |")
     print("|---|---|---|---|")
     for k in CHAIN:
