@@ -7,13 +7,15 @@ Here the whole layer is in-engine:
 
 - the identity dimension is built distributed (mapInPandas over a range) and
   is small -> broadcast into every sign/verify join (J1 in SURVEY §2.4);
-- signing (U1) and verification (U2) are Arrow-batched Pandas UDFs running
-  Ed25519 on executors — no network hop, no driver-side loop. Keys are
-  executor-local singletons (deterministic from symbol), never shipped
-  through closures;
+- signing (U1) and verification (U2) are three Arrow-batched Pandas UDF
+  ops — sign_column_by, verify_column_by and the fused
+  sign_tamper_verify_column_by — on executors, no network hop, no
+  driver-side loop. The DID provider is a column: each row dispatches
+  through the one ALGORITHMS table (EdDSA for did:key, ES256K for did:web
+  and did:ethr). Keys are executor-local singletons (deterministic from
+  symbol), never shipped through closures;
 - authorization-grant checking (U4: veramo_authorisation_credential.ts:
-  242-556) is pure column logic: permission-superset via array_except,
-  scope wildcard via endswith/startswith, expiry via timestamp compare.
+  242-556) is pure column logic in trade_pipeline.authz_check.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ssiintegrateddatapipeline_spark.functions import crypto
 from ssiintegrateddatapipeline_spark.sources.batch import local_frame
 
 SYMBOLS = (
@@ -63,6 +66,17 @@ IDENTITY_SCHEMA = (
 # identifier) never runs for did:web.
 DID_PROVIDERS = ("did:key", "did:web", "did:ethr:sepolia")
 
+# The one sign/verify dispatch: JWS alg (from _executor_keys) ->
+# (jwt_sign, jwt_verify, public_bytes).
+ALGORITHMS = {
+    "EdDSA": (crypto.jwt_sign, crypto.jwt_verify, crypto.public_bytes),
+    "ES256K": (
+        crypto.jwt_sign_es256k,
+        crypto.jwt_verify_es256k,
+        crypto.es256k_public_bytes,
+    ),
+}
+
 # did:web hosting coordinates (host_did_web/src/main.go serves the docs;
 # data_synthesizer/service/veramo/create_web_url.go builds the alias)
 WEB_DID_HOST = "ssi-pipeline.localhost"
@@ -90,7 +104,7 @@ def did_web_alias(symbol: str) -> str:
     return "did:web:" + ":".join(s for s in segments if s)
 
 
-def _executor_keys(symbol: str, provider: str = "did:key"):
+def _executor_keys(symbol: str, provider: str):
     """Executor-local key cache (J2 slot) — LRU 100 + 10 min TTL, the
     reference's DID-cache parameters (veramo-verifier/src/server.ts:249-252);
     built on demand in each worker, never serialized.
@@ -101,7 +115,6 @@ def _executor_keys(symbol: str, provider: str = "did:key"):
     WebDIDProvider creates a Secp256k1 key in createIdentifier
     (veramo_did_manager.ts:50-52), so the conditional Ed25519 top-up in
     veramo_create_protected_did.ts:317-341 never fires for did:web."""
-    from ssiintegrateddatapipeline_spark.functions import crypto
     from ssiintegrateddatapipeline_spark.functions.ttl_cache import executor_cache
 
     def load():
@@ -121,22 +134,8 @@ def _executor_keys(symbol: str, provider: str = "did:key"):
 
 
 def _sign_for(symbol: str, provider: str, claims: dict) -> str:
-    from ssiintegrateddatapipeline_spark.functions import crypto
-
     priv, _, did, alg = _executor_keys(symbol, provider)
-    claims = {"iss": did, **claims}
-    if alg == "EdDSA":
-        return crypto.jwt_sign(claims, priv)
-    return crypto.jwt_sign_es256k(claims, priv)
-
-
-def _verify_for(symbol: str, provider: str, token: str) -> bool:
-    from ssiintegrateddatapipeline_spark.functions import crypto
-
-    _, pub, _, alg = _executor_keys(symbol, provider)
-    if alg == "EdDSA":
-        return crypto.jwt_verify(token, pub)
-    return crypto.jwt_verify_es256k(token, pub)
+    return ALGORITHMS[alg][0]({"iss": did, **claims}, priv)
 
 
 def build_identity_dim(
@@ -148,8 +147,6 @@ def build_identity_dim(
     production this materializes to a Delta/parquet dimension table once and
     is broadcast at stream start.
     """
-    from ssiintegrateddatapipeline_spark.functions import crypto
-
     sym_df = local_frame(spark, [(s,) for s in symbols], "symbol string")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -166,17 +163,12 @@ def build_identity_dim(
                         "permissions": list(PROTECTED_METHODS[:6]),
                     },
                 )
-                key_hex = (
-                    crypto.public_bytes(pub).hex()
-                    if alg == "EdDSA"
-                    else crypto.es256k_public_bytes(pub).hex()
-                )
                 rows.append(
                     {
                         "symbol": symbol,
                         "did": did,
                         "provider": did_provider,
-                        "public_key_hex": key_hex,
+                        "public_key_hex": ALGORITHMS[alg][2](pub).hex(),
                         "authorization_jwt": authz,
                     }
                 )
@@ -185,150 +177,99 @@ def build_identity_dim(
     return sym_df.mapInPandas(gen, IDENTITY_SCHEMA)
 
 
-def sign_column(
-    df: DataFrame,
-    symbol_col: str,
-    payload_col: str,
-    did_provider: str = "did:key",
-) -> DataFrame:
-    """U1: add a 'jwt' column signing payload_col with symbol_col's key
-    under the given DID provider (EdDSA for did:key, ES256K for did:web
-    and did:ethr — see _executor_keys; Ed25519 and RFC 6979 ECDSA are
-    both deterministic, so the token is a pure function of the row).
+class _Keys(dict):
+    """Per-batch (provider, symbol) -> (sign, verify, priv, pub, did) hoist
+    over the TTL key cache: a batch consults _executor_keys once per
+    DISTINCT pair, not once per row — the per-row get_or_load (monotonic()
+    + OrderedDict bookkeeping) was measurable next to the native sign."""
 
-    Arrow-batched Pandas UDF; key lookup is executor-local.
-    """
-    import pandas as pd  # noqa: F811
-
-    @F.pandas_udf("string")
-    def _sign(symbols: pd.Series, payloads: pd.Series) -> pd.Series:
-        from ssiintegrateddatapipeline_spark.functions import crypto
-
-        # consult the TTL key cache (J2) once per DISTINCT symbol per
-        # batch, not once per row — the per-row get_or_load (monotonic()
-        # + OrderedDict bookkeeping) was a measurable share of this
-        # 100k-row sign kernel next to the ~44 µs native sign itself
-        local: dict = {}
-        out = []
-        ap = out.append
-        for sym, payload in zip(symbols.tolist(), payloads.tolist()):
-            ent = local.get(sym)
-            if ent is None:
-                priv, _, did, alg = _executor_keys(sym, did_provider)
-                ent = local[sym] = (priv, did, alg)
-            priv, did, alg = ent
-            claims = {"iss": did, "claims": payload}
-            if alg == "EdDSA":
-                ap(crypto.jwt_sign(claims, priv))
-            else:
-                ap(crypto.jwt_sign_es256k(claims, priv))
-        return pd.Series(out)
-
-    return df.withColumn("jwt", _sign(F.col(symbol_col), F.col(payload_col)))
+    def __missing__(self, key):
+        provider, symbol = key
+        priv, pub, did, alg = _executor_keys(symbol, provider)
+        sign, verify, _ = ALGORITHMS[alg]
+        ent = self[key] = (sign, verify, priv, pub, did)
+        return ent
 
 
-def sign_tamper_verify_column(
-    df: DataFrame,
-    symbol_col: str,
-    payload_col: str,
-    tamper_col: str,
-    did_provider: str = "did:key",
-) -> DataFrame:
-    """U1+U2 round trip in ONE Arrow kernel (guide §4.1): sign the payload,
-    append one byte when ``tamper_col`` is true, verify — adding a boolean
-    ``verified`` column. For round-trip queries the token is produced and
-    consumed on the SAME row, so composing sign_column → verify_column
-    ships every intermediate JWT across the JVM↔Python boundary twice
-    (two ArrowEvalPython nodes) with no other consumer — pure transfer
-    cost. The fused kernel also moves fewer bytes than a fused
-    mapInPandas: only (symbol, payload, tamper) cross inward and one
-    boolean crosses back. Measured 2.05 → 1.4 s for the 100k-row batch
-    round trip at sf0.1 (results bit-identical). Queries that USE the
-    token downstream (the envelope sinks, the 6-config pipeline) keep the
-    composed operators."""
-    import pandas as pd  # noqa: F811
+def _null(v) -> bool:
+    return v is None or v != v  # None or float('nan')
 
-    @F.pandas_udf("boolean")
-    def _roundtrip(
-        symbols: pd.Series, payloads: pd.Series, tampers: pd.Series
-    ) -> pd.Series:
-        from ssiintegrateddatapipeline_spark.functions import crypto
 
-        local: dict = {}  # per-batch key-cache hoist, as in sign_column
-        out = []
-        ap = out.append
-        for sym, payload, tam in zip(
-            symbols.tolist(), payloads.tolist(), tampers.tolist()
-        ):
-            ent = local.get(sym)
-            if ent is None:
-                priv, pub, did, alg = _executor_keys(sym, did_provider)
-                ent = local[sym] = (priv, pub, did, alg)
-            priv, pub, did, alg = ent
-            claims = {"iss": did, "claims": payload}
-            if alg == "EdDSA":
-                jwt = crypto.jwt_sign(claims, priv)
-                if tam:
-                    jwt += "x"
-                ap(crypto.jwt_verify(jwt, pub))
-            else:
-                jwt = crypto.jwt_sign_es256k(claims, priv)
-                if tam:
-                    jwt += "x"
-                ap(crypto.jwt_verify_es256k(jwt, pub))
-        return pd.Series(out)
+def _sign_rows(keys: _Keys, symbols, payloads, providers) -> list:
+    out = []
+    ap = out.append
+    for sym, payload, prov in zip(symbols, payloads, providers):
+        if _null(prov):
+            ap(None)
+            continue
+        sign, _, priv, _, did = keys[prov, sym]
+        ap(sign({"iss": did, "claims": payload}, priv))
+    return out
 
-    return df.withColumn(
-        "verified",
-        _roundtrip(F.col(symbol_col), F.col(payload_col), F.col(tamper_col)),
-    )
+
+def _verify_rows(keys: _Keys, symbols, tokens, providers) -> list:
+    out = []
+    ap = out.append
+    for sym, token, prov in zip(symbols, tokens, providers):
+        if _null(prov) or _null(token):
+            ap(None)
+            continue
+        _, verify, _, pub, _ = keys[prov, sym]
+        ap(verify(token, pub))
+    return out
 
 
 def sign_column_by(
     df: DataFrame, symbol_col: str, payload_col: str, provider_col: str
 ) -> DataFrame:
-    """U1 with the DID provider as DATA: one Arrow-batched sign stage
-    dispatching per-row on a provider column, instead of one plan branch
-    per provider. Collapsing the per-provider branches into a single
-    stage keeps the logical plan shallow (Spark's analyzer runs eagerly
-    per Dataset transformation, so three parallel crypto branches cost
-    3x the driver-side analysis of one) and the key lookup stays
-    executor-cached per (provider, symbol)."""
-    import pandas as pd  # noqa: F811
+    """U1: add a 'jwt' column signing payload_col with symbol_col's key
+    under the row's DID provider (ALGORITHMS: EdDSA for did:key, ES256K
+    for did:web and did:ethr; Ed25519 and RFC 6979 ECDSA are both
+    deterministic, so the token is a pure function of the row). A null
+    provider is a no-crypto row (an SSI-off config) -> null jwt.
+
+    The provider is DATA, not a plan branch: one Arrow-batched stage
+    dispatches per row, so a provider sweep keeps the logical plan shallow
+    (Spark's analyzer runs eagerly per Dataset transformation, so three
+    parallel crypto branches cost 3x the driver-side analysis of one). A
+    fixed provider is a literal column."""
 
     @F.pandas_udf("string")
     def _sign(
         symbols: pd.Series, payloads: pd.Series, providers: pd.Series
     ) -> pd.Series:
-        from ssiintegrateddatapipeline_spark.functions import crypto
-
-        # per-batch (provider, symbol) key-cache hoist, same as
-        # sign_column's kernel — the per-row TTL get_or_load bookkeeping
-        # is measurable next to the native sign
-        local: dict = {}
-        out = []
-        ap = out.append
-        # null provider = no-crypto row (an SSI-off config) -> null jwt
-        for sym, payload, prov in zip(
-            symbols.tolist(), payloads.tolist(), providers.tolist()
-        ):
-            if prov is None or prov != prov:  # None or float('nan')
-                ap(None)
-                continue
-            ent = local.get((prov, sym))
-            if ent is None:
-                priv, _, did, alg = _executor_keys(sym, prov)
-                ent = local[(prov, sym)] = (priv, did, alg)
-            priv, did, alg = ent
-            claims = {"iss": did, "claims": payload}
-            if alg == "EdDSA":
-                ap(crypto.jwt_sign(claims, priv))
-            else:
-                ap(crypto.jwt_sign_es256k(claims, priv))
-        return pd.Series(out)
+        return pd.Series(
+            _sign_rows(
+                _Keys(), symbols.tolist(), payloads.tolist(), providers.tolist()
+            ),
+            dtype="object",
+        )
 
     return df.withColumn(
         "jwt", _sign(F.col(symbol_col), F.col(payload_col), F.col(provider_col))
+    )
+
+
+def verify_column_by(
+    df: DataFrame, symbol_col: str, jwt_col: str, provider_col: str
+) -> DataFrame:
+    """U2: add a boolean 'verified' column checking each JWT against the
+    row's (provider, symbol) public key — the twin of sign_column_by. A
+    null provider or a null token -> null verified."""
+
+    @F.pandas_udf("boolean")
+    def _verify(
+        symbols: pd.Series, jwts: pd.Series, providers: pd.Series
+    ) -> pd.Series:
+        return pd.Series(
+            _verify_rows(
+                _Keys(), symbols.tolist(), jwts.tolist(), providers.tolist()
+            ),
+            dtype="object",
+        )
+
+    return df.withColumn(
+        "verified", _verify(F.col(symbol_col), F.col(jwt_col), F.col(provider_col))
     )
 
 
@@ -339,18 +280,19 @@ def sign_tamper_verify_column_by(
     tamper_col: str,
     provider_col: str,
 ) -> DataFrame:
-    """U1+U2 round trip in ONE Arrow kernel with the DID provider as DATA
-    (guide §4.1) — the fusion of :func:`sign_tamper_verify_column` and
-    the ``_by`` per-row provider dispatch. For the provider-matrix sweep
-    the token is produced and consumed on the same row with no other
-    consumer, so the composed sign_column_by → tamper → verify_column_by
-    shipped every JWT across the JVM↔Python boundary twice (two
-    ArrowEvalPython nodes). Only (symbol, payload, tamper, provider)
-    cross inward; one boolean crosses back. Null provider = SSI-off row
-    → null verified, exactly as the composed pair (null jwt → null
-    verified). The composed ``_by`` operators stay contract-exercised by
-    streaming_provider_matrix."""
-    import pandas as pd  # noqa: F811
+    """U1+U2 round trip in ONE Arrow kernel (guide §4.1): sign each row,
+    append one byte where ``tamper_col`` is true, verify — adding a
+    boolean ``verified`` column, null where the provider is null (as the
+    composed pair gives).
+
+    For round-trip queries the token is produced and consumed on the SAME
+    row, so composing sign_column_by → when() → verify_column_by ships
+    every intermediate JWT across the JVM↔Python boundary twice (two
+    ArrowEvalPython nodes with a JVM projection between them) with no
+    other consumer — pure transfer cost. Here only (symbol, payload,
+    tamper, provider) cross inward and one boolean crosses back. Measured
+    2.05 → 1.4 s for the 100k-row batch round trip at sf0.1
+    (median-of-4 interleaved A/B, results bit-identical)."""
 
     @F.pandas_udf("boolean")
     def _roundtrip(
@@ -359,38 +301,14 @@ def sign_tamper_verify_column_by(
         tampers: pd.Series,
         providers: pd.Series,
     ) -> pd.Series:
-        from ssiintegrateddatapipeline_spark.functions import crypto
-
-        # per-batch (provider, symbol) key-cache hoist, as in the _by pair
-        local: dict = {}
-        out = []
-        ap = out.append
-        for sym, payload, tam, prov in zip(
-            symbols.tolist(),
-            payloads.tolist(),
-            tampers.tolist(),
-            providers.tolist(),
-        ):
-            if prov is None or prov != prov:  # None or float('nan')
-                ap(None)
-                continue
-            ent = local.get((prov, sym))
-            if ent is None:
-                priv, pub, did, alg = _executor_keys(sym, prov)
-                ent = local[(prov, sym)] = (priv, pub, did, alg)
-            priv, pub, did, alg = ent
-            claims = {"iss": did, "claims": payload}
-            if alg == "EdDSA":
-                jwt = crypto.jwt_sign(claims, priv)
-                if tam:
-                    jwt += "x"
-                ap(crypto.jwt_verify(jwt, pub))
-            else:
-                jwt = crypto.jwt_sign_es256k(claims, priv)
-                if tam:
-                    jwt += "x"
-                ap(crypto.jwt_verify_es256k(jwt, pub))
-        return pd.Series(out, dtype="object")
+        keys = _Keys()
+        syms, provs = symbols.tolist(), providers.tolist()
+        jwts = _sign_rows(keys, syms, payloads.tolist(), provs)
+        jwts = [
+            jwt + "x" if tam and jwt is not None else jwt
+            for jwt, tam in zip(jwts, tampers.tolist())
+        ]
+        return pd.Series(_verify_rows(keys, syms, jwts, provs), dtype="object")
 
     return df.withColumn(
         "verified",
@@ -401,76 +319,3 @@ def sign_tamper_verify_column_by(
             F.col(provider_col),
         ),
     )
-
-
-def verify_column_by(
-    df: DataFrame, symbol_col: str, jwt_col: str, provider_col: str
-) -> DataFrame:
-    """U2 twin of sign_column_by: per-row provider dispatch in one stage."""
-    import pandas as pd  # noqa: F811
-
-    @F.pandas_udf("boolean")
-    def _verify(
-        symbols: pd.Series, jwts: pd.Series, providers: pd.Series
-    ) -> pd.Series:
-        from ssiintegrateddatapipeline_spark.functions import crypto
-
-        # per-batch (provider, symbol) key-cache hoist, as in _sign
-        local: dict = {}
-        out = []
-        ap = out.append
-        for sym, token, prov in zip(
-            symbols.tolist(), jwts.tolist(), providers.tolist()
-        ):
-            if prov is None or prov != prov or token is None or token != token:
-                ap(None)
-                continue
-            ent = local.get((prov, sym))
-            if ent is None:
-                _, pub, _, alg = _executor_keys(sym, prov)
-                ent = local[(prov, sym)] = (pub, alg)
-            pub, alg = ent
-            if alg == "EdDSA":
-                ap(crypto.jwt_verify(token, pub))
-            else:
-                ap(crypto.jwt_verify_es256k(token, pub))
-        return pd.Series(out, dtype="object")
-
-    return df.withColumn(
-        "verified", _verify(F.col(symbol_col), F.col(jwt_col), F.col(provider_col))
-    )
-
-
-def verify_column(
-    df: DataFrame,
-    symbol_col: str,
-    jwt_col: str,
-    did_provider: str = "did:key",
-) -> DataFrame:
-    """U2: add a boolean 'verified' column checking the JWT signature against
-    the symbol's public key for the given provider (executor-local TTL
-    cache — keys are static here; the reference's LRU+TTL DID cache J2 maps
-    to this slot)."""
-    import pandas as pd  # noqa: F811
-
-    @F.pandas_udf("boolean")
-    def _verify(symbols: pd.Series, jwts: pd.Series) -> pd.Series:
-        from ssiintegrateddatapipeline_spark.functions import crypto
-
-        # same per-batch key-cache hoist as sign_column's kernel
-        local: dict = {}
-        out = []
-        ap = out.append
-        for sym, token in zip(symbols.tolist(), jwts.tolist()):
-            ent = local.get(sym)
-            if ent is None:
-                _, pub, _, alg = _executor_keys(sym, did_provider)
-                ent = local[sym] = (pub, alg)
-            pub, alg = ent
-            if alg == "EdDSA":
-                ap(crypto.jwt_verify(token, pub))
-            else:
-                ap(crypto.jwt_verify_es256k(token, pub))
-        return pd.Series(out)
-
-    return df.withColumn("verified", _verify(F.col(symbol_col), F.col(jwt_col)))

@@ -165,24 +165,19 @@ def authz_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sign_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1+U2 round trip: sign each event's payload with its symbol's Ed25519
-    key, tamper a deterministic subset (event_id % 50 == 0), verify.
+    """U1+U2 round trip: sign each event's payload with its symbol's did:key
+    (Ed25519) key, tamper a deterministic subset (event_id % 50 == 0),
+    verify.
 
     The oracle predicts the outcome column exactly: verification succeeds
     iff the payload was not tampered with.
 
     Sign, tamper and verify run in ONE Arrow kernel
-    (identity.sign_tamper_verify_column, guide §4.1): composed as
-    sign_column → when() → verify_column the intermediate ~60 MB of JWT
-    strings crossed the JVM↔Python boundary through two ArrowEvalPython
-    nodes with a JVM projection between them — pure transfer cost, since
-    the tokens are produced and consumed by Python on the same rows.
-    Fusing measured 2.05 → ~1.4 s (median-of-4 interleaved A/B, sf0.1,
-    results bit-identical). The composed U1/U2 operators remain exercised
-    by the 6-config pipeline family, whose sinks consume the tokens.
+    (identity.sign_tamper_verify_column_by, with the provider a literal
+    column) — nothing downstream reads the token.
     """
     from ssiintegrateddatapipeline_spark.operators.identity import (
-        sign_tamper_verify_column,
+        sign_tamper_verify_column_by,
     )
 
     ev = (
@@ -195,11 +190,12 @@ def sign_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             _symbol_col().alias("symbol"),
             F.col("props").alias("payload"),
             (F.col("event_id") % 50 == 0).alias("tampered"),
+            F.lit("did:key").alias("provider"),
         )
     )
-    return sign_tamper_verify_column(ev, "symbol", "payload", "tampered").select(
-        "event_id", "symbol", "tampered", "verified"
-    )
+    return sign_tamper_verify_column_by(
+        ev, "symbol", "payload", "tampered", "provider"
+    ).select("event_id", "symbol", "tampered", "verified")
 
 
 def json_parse_route(spark: SparkSession, sf_dir: str) -> DataFrame:

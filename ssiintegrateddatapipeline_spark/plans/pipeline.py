@@ -29,8 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssiintegrateddatapipeline_spark.operators.identity import (
-    sign_column,
-    verify_column,
+    sign_tamper_verify_column_by,
 )
 from ssiintegrateddatapipeline_spark.operators.trade_pipeline import trade_envelope
 from ssiintegrateddatapipeline_spark.sources.batch import spread
@@ -88,23 +87,16 @@ def build_pipeline(
         # stage — the local scan is a single parquet split (see spread())
         env = spread(env)
         ev = env.select(
-            F.md5(F.col("trade_event_id")).alias("row_key"),
             "trade_event_id",
             "symbol",
             "start_timestamp",
             F.to_json(F.struct("price", "volume")).alias("payload"),
+            (F.substring("trade_event_id", 1, 2) == F.lit("00")).alias("tamper"),
+            F.lit(config.did_provider).alias("provider"),
         )
-        signed = sign_column(ev, "symbol", "payload", config.did_provider)
-        tampered = signed.withColumn(
-            "jwt",
-            F.when(
-                F.substring("trade_event_id", 1, 2) == F.lit("00"),
-                F.concat(F.col("jwt"), F.lit("x")),
-            ).otherwise(F.col("jwt")),
-        )
-        out = verify_column(tampered, "symbol", "jwt", config.did_provider).select(
-            "trade_event_id", "symbol", "start_timestamp", "verified"
-        )
+        out = sign_tamper_verify_column_by(
+            ev, "symbol", "payload", "tamper", "provider"
+        ).select("trade_event_id", "symbol", "start_timestamp", "verified")
     else:
         out = env.select(
             "trade_event_id",
@@ -153,21 +145,15 @@ def provider_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     createIdentifier, so the Ed25519 top-up
     (veramo_create_protected_did.ts:332-337) never fires for them — same
     tamper/verify contract across methods."""
-    from ssiintegrateddatapipeline_spark.operators.identity import (
-        sign_tamper_verify_column_by,
-    )
-
     # ONE plan for the whole sweep: the provider is a data column (a
     # broadcast 3-row dim cross-joined under the crypto stage), not three
     # parallel plan branches — same crypto volume, a third of the stages,
     # and the eager per-Dataset analysis cost is paid once instead of
     # three times (the branched form spent ~4 s of driver time just
-    # CONSTRUCTING the union plan at sf0.1). Round 12: the sweep's
-    # sign → tamper → verify is ONE fused kernel (guide §4.1) — the JWTs
-    # have no downstream consumer here, so the composed _by pair shipped
-    # every token through the JVM twice for nothing; the composed
-    # operators stay contract-exercised by streaming_provider_matrix
-    # (which also proves the null-provider SSI-off dispatch).
+    # CONSTRUCTING the union plan at sf0.1). Sign → tamper → verify is the
+    # one fused kernel: nothing downstream reads the tokens. The composed
+    # sign_column_by/verify_column_by pair is exercised by perfbench's
+    # signed-trade stream and tests/test_crypto.py.
     env = trade_envelope(spark, sf_dir)
     env = env.where(F.substring("trade_event_id", 1, 1) < F.lit("1"))
     ev = spread(env).select(

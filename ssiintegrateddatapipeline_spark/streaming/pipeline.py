@@ -975,19 +975,18 @@ def streaming_throughput_30s(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_sign_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's consumer->verifier hop AS a streaming stage: every
-    micro-batch is signed (Arrow-batched EdDSA), a deterministic subset
+    micro-batch is signed (did:key, EdDSA), a deterministic subset
     tampered, verified, and the per-symbol verification tally aggregated —
     kafka_consumer.py:82-161's per-message verify loop expressed as one
     declarative plan. State is one row per symbol (complete mode); the
     crypto runs inside the micro-batch pipeline, not a side service.
 
     The sign→tamper→verify round trip is ONE fused Arrow kernel
-    (identity.sign_tamper_verify_column, guide §4.1) — as in the batch
-    twin, the composed U1/U2 pair shipped every intermediate JWT across
-    the Python boundary twice per micro-batch for no other consumer."""
+    (identity.sign_tamper_verify_column_by, the provider a literal
+    column), as in the batch twin."""
     from ssiintegrateddatapipeline_spark.operators.identity import (
         SYMBOLS,
-        sign_tamper_verify_column,
+        sign_tamper_verify_column_by,
     )
 
     stream = events_stream(spark, sf_dir)
@@ -1001,8 +1000,11 @@ def streaming_sign_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(arr, (F.col("user_id") % 5 + 1).cast("int")).alias("symbol"),
         F.col("props").alias("payload"),
         (F.col("event_id") % 50 == 0).alias("tampered"),
+        F.lit("did:key").alias("provider"),
     ).repartition(spark.sparkContext.defaultParallelism, F.col("event_id"))
-    verified = sign_tamper_verify_column(ev, "symbol", "payload", "tampered")
+    verified = sign_tamper_verify_column_by(
+        ev, "symbol", "payload", "tampered", "provider"
+    )
     tally = verified.groupBy("symbol").agg(
         F.count("*").alias("n_events"),
         F.sum(F.when(F.col("verified"), 1).otherwise(0))
@@ -1026,16 +1028,17 @@ def streaming_provider_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage: the sampled source is cross-joined with a broadcast dim of the
     DISTINCT (provider, ssi) pairs (crypto work is deduped — configs that
     differ only in cache/mode labels share one signed row; SSI-off rows
-    carry a null crypto_provider and pass the null-safe dispatch UDFs
-    untouched), then a second broadcast join fans the pairs back out to
-    the six labeled configs before the complete-mode tally. One checkpoint,
-    one sign stage, one verify stage, 6 rows of state. A deterministic
-    1-in-16 ``event_id`` sample gates the Arrow-batched crypto exactly
-    like the batch matrix's hash sample. ``cache_did`` /
-    ``processing_mode`` are honest metadata labels (the executor-local TTL
-    key cache and partition parallelism are engine-level, not per-row
-    branches), mirroring how the reference stamps config env-vars into
-    every metric series (kafka_consumer/app/metrics/metrics.py:33-38).
+    carry a null crypto_provider, which the fused sign → tamper → verify
+    kernel passes through as null verified), then a second broadcast join
+    fans the pairs back out to the six labeled configs before the
+    complete-mode tally. One checkpoint, one crypto stage, 6 rows of
+    state. A deterministic 1-in-16 ``event_id`` sample gates the
+    Arrow-batched crypto exactly like the batch matrix's hash sample.
+    ``cache_did`` / ``processing_mode`` are honest metadata labels (the
+    executor-local TTL key cache and partition parallelism are
+    engine-level, not per-row branches), mirroring how the reference
+    stamps config env-vars into every metric series
+    (kafka_consumer/app/metrics/metrics.py:33-38).
 
     Scale: state is 6 rows; the crypto cost is bounded by the sample gate;
     each branch's scan/filter/UDF chain is stateless and partitions
@@ -1043,8 +1046,7 @@ def streaming_provider_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ssiintegrateddatapipeline_spark.operators.identity import (
         SYMBOLS,
-        sign_column_by,
-        verify_column_by,
+        sign_tamper_verify_column_by,
     )
     from ssiintegrateddatapipeline_spark.plans.pipeline import OPTION_SETS
 
@@ -1061,6 +1063,7 @@ def streaming_provider_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "symbol"
             ),
             F.col("props").alias("payload"),
+            (F.col("event_id") % 50 == 0).alias("tampered"),
         )
         .repartition(spark.sparkContext.defaultParallelism, F.col("event_id"))
     )
@@ -1080,14 +1083,9 @@ def streaming_provider_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "processing_mode string",
     )
     evp = ev.crossJoin(F.broadcast(pair_df))
-    signed = sign_column_by(evp, "symbol", "payload", "crypto_provider")
-    tampered = signed.withColumn(
-        "jwt",
-        F.when(
-            F.col("event_id") % 50 == 0, F.concat(F.col("jwt"), F.lit("x"))
-        ).otherwise(F.col("jwt")),
+    ver = sign_tamper_verify_column_by(
+        evp, "symbol", "payload", "tampered", "crypto_provider"
     )
-    ver = verify_column_by(tampered, "symbol", "jwt", "crypto_provider")
     labeled = ver.join(
         F.broadcast(cfg_df), ["did_provider", "ssi_validation"]
     )

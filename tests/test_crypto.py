@@ -293,25 +293,39 @@ def test_did_peer_and_pkh_resolution():
 
 
 def test_provider_dispatch_columns_null_safe(spark):
-    """sign_column_by / verify_column_by: per-row provider dispatch signs
-    with the row's provider (tokens match the fixed-provider path) and a
-    null provider (an SSI-off config row) flows through as null jwt and
-    null verified."""
+    """sign_column_by / verify_column_by / sign_tamper_verify_column_by:
+    per-row provider dispatch signs with the row's provider (tokens match
+    _sign_for), the fused op rejects exactly the tampered rows, and a null
+    provider (an SSI-off config row) or a null token gives null."""
     from ssiintegrateddatapipeline_spark.operators import identity as I
 
     rows = [
-        ("BINANCE:BTCUSDT", "p0", "did:key"),
-        ("BINANCE:ETHUSDT", "p1", "did:web"),
-        ("BINANCE:SOLUSDT", "p2", "did:ethr:sepolia"),
-        ("BINANCE:BTCUSDT", "p3", None),
+        ("BINANCE:BTCUSDT", "p0", "did:key", False),
+        ("BINANCE:ETHUSDT", "p1", "did:web", False),
+        ("BINANCE:SOLUSDT", "p2", "did:ethr:sepolia", False),
+        ("BINANCE:BTCUSDT", "p3", None, False),
+        ("BINANCE:ADAUSDT", "p4", "did:web", True),
     ]
-    df = spark.createDataFrame(rows, "symbol string, payload string, prov string")
+    df = spark.createDataFrame(
+        rows, "symbol string, payload string, prov string, tamper boolean"
+    )
     out = I.verify_column_by(
         I.sign_column_by(df, "symbol", "payload", "prov"), "symbol", "jwt", "prov"
     ).collect()
     by_payload = {r.payload: r for r in out}
-    for payload, (sym, _, prov) in zip(["p0", "p1", "p2"], rows):
+    for sym, payload, prov, _ in rows[:3]:
         r = by_payload[payload]
         assert r.jwt == I._sign_for(sym, prov, {"claims": payload})
         assert r.verified is True
     assert by_payload["p3"].jwt is None and by_payload["p3"].verified is None
+
+    fused = I.sign_tamper_verify_column_by(df, "symbol", "payload", "tamper", "prov")
+    verdicts = {r.payload: r.verified for r in fused.collect()}
+    assert verdicts == {"p0": True, "p1": True, "p2": True, "p3": None, "p4": False}
+
+    no_token = spark.createDataFrame(
+        [("BINANCE:BTCUSDT", None, "did:key")],
+        "symbol string, jwt string, prov string",
+    )
+    [r] = I.verify_column_by(no_token, "symbol", "jwt", "prov").collect()
+    assert r.verified is None

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from ssiintegrateddatapipeline_spark.operators.identity import (
     build_identity_dim,
-    sign_column,
-    verify_column,
+    sign_column_by,
+    verify_column_by,
 )
 from ssiintegrateddatapipeline_spark.sources import sinks
 from ssiintegrateddatapipeline_spark.sources import trade_feed as TF
@@ -30,9 +30,9 @@ def test_full_pipeline_batch_shape(spark):
 
     payload = enriched.withColumn(
         "payload", F.to_json(F.struct("price", "volume"))
-    )
-    signed = sign_column(payload, "symbol", "payload")
-    verified = verify_column(signed, "symbol", "jwt")
+    ).withColumn("provider", F.lit("did:key"))
+    signed = sign_column_by(payload, "symbol", "payload", "provider")
+    verified = verify_column_by(signed, "symbol", "jwt", "provider")
     assert verified.where(~F.col("verified")).count() == 0  # untampered
 
     windows = (
@@ -60,9 +60,11 @@ def test_full_pipeline_streaming_to_metrics_sink(spark, tmp_path):
         .load()
     )
     ingested = TF._ingest_projection(raw)
-    payload = ingested.withColumn("payload", F.to_json(F.struct("price", "volume")))
-    signed = sign_column(payload, "symbol", "payload")
-    verified = verify_column(signed, "symbol", "jwt")
+    payload = ingested.withColumn(
+        "payload", F.to_json(F.struct("price", "volume"))
+    ).withColumn("provider", F.lit("did:key"))
+    signed = sign_column_by(payload, "symbol", "payload", "provider")
+    verified = verify_column_by(signed, "symbol", "jwt", "provider")
     windows = (
         verified.withWatermark("event_timestamp", "1 minute")
         .groupBy(F.window("event_timestamp", "30 seconds").alias("w"), "symbol")
