@@ -2,7 +2,7 @@
 
 No cache here keeps a query's own work — its plan, result, trained model,
 index or stream drive — from one call to the next; every call recomputes
-it. Six registered dicts remain, each for a stated reason:
+it. Five registered dicts remain, each for a stated reason:
 
 - ``_EPHEMERAL`` (:func:`track`): call-scoped ``.persist()``-ed
   intermediates behind lazily returned plans, reused inside one query and
@@ -10,8 +10,6 @@ it. Six registered dicts remain, each for a stated reason:
 - ``sources/batch._LOAD_MEMO``: analyzed parquet relations (metadata, no
   row data). It sits on the gated ``dashboard`` path, where clearing it
   before each panel cost +23% on the mean of per-panel medians;
-- ``operators/wire._JVM_AVRO_CACHE``: whether the spark-avro jar is
-  loaded, a capability probe per application;
 - ``sources/files._RT_CACHE`` and ``streaming/pipeline._ONLINE_STAGE_CACHE``:
   staged input files that stand in for data arriving from outside the
   engine;

@@ -3,9 +3,9 @@
 The reference serializes every Kafka message as registry-backed Avro
 (kafka_producer/app/handlers/kafka_producer.py:46-62 — AvroSerializer;
 consumer side kafka_consumer/app/handlers/kafka_consumer.py:44-45). Spark's
-``to_avro``/``from_avro`` live in the external spark-avro module, which is
-not bundled with a pip pyspark install — so the wire format is implemented
-here from the public Avro specification (binary encoding section):
+own Avro functions live in the external spark-avro module, which is not
+bundled with a pip pyspark install — so the wire format is implemented here
+from the public Avro specification (binary encoding section):
 
 - int/long: zigzag varint
 - float/double: little-endian IEEE-754

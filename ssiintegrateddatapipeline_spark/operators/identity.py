@@ -114,18 +114,24 @@ def _executor_keys(symbol: str, provider: str):
     mints Ed25519); did:web and did:ethr sign ES256K — Veramo's
     WebDIDProvider creates a Secp256k1 key in createIdentifier
     (veramo_did_manager.ts:50-52), so the conditional Ed25519 top-up in
-    veramo_create_protected_did.ts:317-341 never fires for did:web."""
+    veramo_create_protected_did.ts:317-341 never fires for did:web.
+
+    Only ``did:key``, ``did:web`` and ``did:ethr[:network]`` are providers;
+    any other string raises ValueError rather than signing under a guess."""
     from ssiintegrateddatapipeline_spark.functions.ttl_cache import executor_cache
+
+    is_ethr = provider == "did:ethr" or provider.startswith("did:ethr:")
+    if provider not in ("did:key", "did:web") and not is_ethr:
+        raise ValueError(f"unknown DID provider: {provider!r}")
 
     def load():
         if provider == "did:key":
             priv, pub = crypto.keypair_for(symbol)
             return (priv, pub, crypto.did_key_for(pub), "EdDSA")
-        if provider.startswith("did:ethr"):
-            priv, pub = crypto.es256k_keypair_for(symbol)
+        priv, pub = crypto.es256k_keypair_for(symbol)
+        if is_ethr:
             network = provider.split(":")[2] if provider.count(":") >= 2 else ""
             return (priv, pub, crypto.did_ethr_for(pub, network=network), "ES256K")
-        priv, pub = crypto.es256k_keypair_for(symbol)
         return (priv, pub, did_web_alias(symbol), "ES256K")
 
     return executor_cache("symbol_keys", max_size=100, ttl_secs=600.0).get_or_load(
@@ -181,11 +187,18 @@ class _Keys(dict):
     """Per-batch (provider, symbol) -> (sign, verify, priv, pub, did) hoist
     over the TTL key cache: a batch consults _executor_keys once per
     DISTINCT pair, not once per row — the per-row get_or_load (monotonic()
-    + OrderedDict bookkeeping) was measurable next to the native sign."""
+    + OrderedDict bookkeeping) was measurable next to the native sign.
+    A null or unknown provider maps to None: the row's output is null."""
 
     def __missing__(self, key):
         provider, symbol = key
-        priv, pub, did, alg = _executor_keys(symbol, provider)
+        if _null(provider):
+            return None
+        try:
+            priv, pub, did, alg = _executor_keys(symbol, provider)
+        except ValueError:
+            self[key] = None
+            return None
         sign, verify, _ = ALGORITHMS[alg]
         ent = self[key] = (sign, verify, priv, pub, did)
         return ent
@@ -199,10 +212,11 @@ def _sign_rows(keys: _Keys, symbols, payloads, providers) -> list:
     out = []
     ap = out.append
     for sym, payload, prov in zip(symbols, payloads, providers):
-        if _null(prov):
+        k = keys[prov, sym]
+        if k is None:
             ap(None)
             continue
-        sign, _, priv, _, did = keys[prov, sym]
+        sign, _, priv, _, did = k
         ap(sign({"iss": did, "claims": payload}, priv))
     return out
 
@@ -211,10 +225,11 @@ def _verify_rows(keys: _Keys, symbols, tokens, providers) -> list:
     out = []
     ap = out.append
     for sym, token, prov in zip(symbols, tokens, providers):
-        if _null(prov) or _null(token):
+        k = keys[prov, sym]
+        if k is None or _null(token):
             ap(None)
             continue
-        _, verify, _, pub, _ = keys[prov, sym]
+        _, verify, _, pub, _ = k
         ap(verify(token, pub))
     return out
 
@@ -226,7 +241,8 @@ def sign_column_by(
     under the row's DID provider (ALGORITHMS: EdDSA for did:key, ES256K
     for did:web and did:ethr; Ed25519 and RFC 6979 ECDSA are both
     deterministic, so the token is a pure function of the row). A null
-    provider is a no-crypto row (an SSI-off config) -> null jwt.
+    provider is a no-crypto row (an SSI-off config) -> null jwt; so is an
+    unknown provider, which is never signed under a guessed key.
 
     The provider is DATA, not a plan branch: one Arrow-batched stage
     dispatches per row, so a provider sweep keeps the logical plan shallow
@@ -255,7 +271,7 @@ def verify_column_by(
 ) -> DataFrame:
     """U2: add a boolean 'verified' column checking each JWT against the
     row's (provider, symbol) public key — the twin of sign_column_by. A
-    null provider or a null token -> null verified."""
+    null or unknown provider, or a null token -> null verified."""
 
     @F.pandas_udf("boolean")
     def _verify(
@@ -282,8 +298,8 @@ def sign_tamper_verify_column_by(
 ) -> DataFrame:
     """U1+U2 round trip in ONE Arrow kernel (guide §4.1): sign each row,
     append one byte where ``tamper_col`` is true, verify — adding a
-    boolean ``verified`` column, null where the provider is null (as the
-    composed pair gives).
+    boolean ``verified`` column, null where the provider is null or
+    unknown (as the composed pair gives).
 
     For round-trip queries the token is produced and consumed on the SAME
     row, so composing sign_column_by → when() → verify_column_by ships

@@ -64,8 +64,7 @@ def multimodal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decode kernels behind a capability probe (same contract shape as the
-# JVM-avro fallback in operators/wire.py): the real path runs when the
+# Decode kernels behind a capability probe: the real path runs when the
 # payload actually parses — Pillow when importable, else a pure PNG
 # IHDR-header parse (no library needed) for image dims, and
 # soundfile-or-stdlib-wave for audio. Payloads that are not real media

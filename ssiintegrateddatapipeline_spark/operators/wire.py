@@ -3,8 +3,9 @@
 Re-expresses P10 (Avro serialize: kafka_producer/app/handlers/
 kafka_producer.py:93-132) and the S3 deserialize side (kafka_consumer/app/
 handlers/kafka_consumer.py:44-45) with the engine's own binary codec
-(functions/avro_codec.py — pure Avro-spec implementation, since the
-spark-avro module isn't available offline).
+(functions/avro_codec.py — a pure Avro-spec implementation). It is the one
+Avro path: Avro binary carries no schema, so a JVM Avro consumer reads the
+same bytes.
 
 Design:
 - timestamps are converted to epoch-microsecond longs JVM-side
@@ -22,8 +23,6 @@ Design:
 
 from __future__ import annotations
 
-import copy
-import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -65,92 +64,10 @@ _DECODED_SPARK_SCHEMA = (
 )
 
 
-# Deserialization schema with logicalType annotations stripped: the Avro
-# *binary* is identical (logical types only annotate the long), but
-# spark-avro's ``from_avro`` would otherwise surface timestamp-micros longs
-# as Catalyst TimestampType, changing the decoded schema vs the Python
-# codec path. Plain longs keep both paths schema-identical.
-def _strip_logical(node):
-    """Remove every logicalType annotation, however deeply nested — union
-    branches (["null", {"type":"long","logicalType":...}]), array items,
-    map values, and nested record fields all recurse, so the JVM from_avro
-    path surfaces the same plain types as the Python codec."""
-    if isinstance(node, list):
-        return [_strip_logical(b) for b in node]
-    if isinstance(node, dict):
-        out = {k: v for k, v in node.items() if k != "logicalType"}
-        for key in ("type", "items", "values"):
-            if key in out and not isinstance(out[key], str):
-                out[key] = _strip_logical(out[key])
-        if isinstance(out.get("fields"), list):
-            out["fields"] = [_strip_logical(f) for f in out["fields"]]
-        # {"type": "long"} with nothing else collapses back to the bare name
-        if set(out) == {"type"} and isinstance(out["type"], str):
-            return out["type"]
-        return out
-    return node
-
-
-TRADE_WIRE_SCHEMA_PLAIN = _strip_logical(copy.deepcopy(TRADE_WIRE_SCHEMA))
-
-
-def _assert_no_logical(node) -> None:
-    if isinstance(node, list):
-        for b in node:
-            _assert_no_logical(b)
-    elif isinstance(node, dict):
-        assert "logicalType" not in node, f"logicalType survived: {node}"
-        for v in node.values():
-            _assert_no_logical(v)
-
-
-_assert_no_logical(TRADE_WIRE_SCHEMA_PLAIN)
-
-# JVM avro availability, probed once per SparkSession application. The
-# reference serializes through a registry-backed AvroSerializer
-# (kafka_producer/app/handlers/kafka_producer.py:46-62); on a real cluster
-# with the spark-avro package loaded we use the JVM ``to_avro``/``from_avro``
-# (whole-stage, no Python boundary); offline — where the jar is absent —
-# we fall back to the pure-Python codec inside mapInPandas.
-from ssiintegrateddatapipeline_spark.caches import register
-
-_JVM_AVRO_CACHE: dict[str, bool] = register({})
-
-
-def jvm_avro_available(spark: SparkSession) -> bool:
-    """True iff the spark-avro data source is loaded in this session."""
-    key = spark.sparkContext.applicationId
-    if key not in _JVM_AVRO_CACHE:
-        ok = False
-        try:
-            from pyspark.sql.avro.functions import to_avro
-
-            probe = spark.range(1).select(F.lit("x").alias("s"))
-            probe.select(to_avro(probe.s)).collect()
-            ok = True
-        except Exception:
-            ok = False
-        _JVM_AVRO_CACHE[key] = ok
-    return _JVM_AVRO_CACHE[key]
-
-
-def avro_serialize(df: DataFrame, use_jvm: bool | None = None) -> DataFrame:
-    """P10: rows -> (key, value) with value = Avro binary per TRADE_WIRE_SCHEMA.
-
-    ``use_jvm=None`` probes the session once: JVM ``to_avro`` when the
-    spark-avro package is loaded (zero Python boundary, stays in codegen),
-    else the own-codec mapInPandas path (schema-compiled once per worker)."""
-    if use_jvm is None:
-        use_jvm = jvm_avro_available(df.sparkSession)
-    if use_jvm:
-        from pyspark.sql.avro.functions import to_avro
-
-        return df.select(
-            F.col("symbol").alias("key"),
-            to_avro(
-                F.struct(*_FIELDS), json.dumps(TRADE_WIRE_SCHEMA_PLAIN)
-            ).alias("value"),
-        )
+def avro_serialize(df: DataFrame) -> DataFrame:
+    """P10: rows -> (key, value) with value = Avro binary per TRADE_WIRE_SCHEMA,
+    encoded by the own codec inside mapInPandas (schema compiled once per
+    worker)."""
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # batch encode: whole Arrow chunk into one shared buffer, no
@@ -163,20 +80,10 @@ def avro_serialize(df: DataFrame, use_jvm: bool | None = None) -> DataFrame:
     return df.mapInPandas(enc, "key string, value binary")
 
 
-def avro_deserialize(df: DataFrame, use_jvm: bool | None = None) -> DataFrame:
-    """S3: (key, value) -> decoded columns. Same JVM/Python selection as
-    :func:`avro_serialize`; both sides of a round trip resolve to the same
-    path within a session, and the wire bytes are codec-compatible either
-    way (Avro binary carries no schema)."""
-    if use_jvm is None:
-        use_jvm = jvm_avro_available(df.sparkSession)
-    if use_jvm:
-        from pyspark.sql.avro.functions import from_avro
-
-        rec = from_avro(F.col("value"), json.dumps(TRADE_WIRE_SCHEMA_PLAIN))
-        return df.select(rec.alias("r")).select(
-            *[F.col(f"r.{name}").alias(name) for name in _FIELDS]
-        )
+def avro_deserialize(df: DataFrame) -> DataFrame:
+    """S3: (key, value) -> decoded columns. Avro binary carries no schema,
+    so bytes from any spec-conformant writer of TRADE_WIRE_SCHEMA decode
+    here, and a JVM Avro reader decodes these."""
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # batch decode: preallocated per-field column lists, no per-record
@@ -218,28 +125,22 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Avro binary, deserialize, restore timestamps. Output equals the envelope
     exactly — the oracle is the envelope SQL itself.
 
-    When the session resolves to the Python codec (no spark-avro jar), the
-    encode and decode run FUSED in one Arrow kernel (guide §4.1): composed
-    as avro_serialize → avro_deserialize the wire bytes are produced and
-    consumed by Python on the same rows, so two mapInPandas stages shipped
-    them through the JVM for nothing. The wire bytes themselves are built
-    and parsed by the same codec either way. With the jar present both
-    hops stay in the JVM (zero Python boundary) and composition is free —
-    that path keeps the separate operators."""
+    The encode and decode run FUSED in one Arrow kernel (guide §4.1):
+    composed as avro_serialize → avro_deserialize the wire bytes are
+    produced and consumed by Python on the same rows, so two mapInPandas
+    stages would ship them through the JVM for nothing. The kernel uses the
+    same compiled codec as the two operators, so the bytes are identical."""
     env = _wire_env(spark, sf_dir)
-    if jvm_avro_available(spark):
-        decoded = avro_deserialize(avro_serialize(env))
-    else:
 
-        def rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            dumps_b = avro_codec.compile_dumps_batch(TRADE_WIRE_SCHEMA)
-            loads_b = avro_codec.compile_loads_batch(TRADE_WIRE_SCHEMA)
-            for pdf in batches:
-                yield pd.DataFrame(
-                    loads_b(dumps_b([pdf[n].tolist() for n in _FIELDS]))
-                )
+    def rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        dumps_b = avro_codec.compile_dumps_batch(TRADE_WIRE_SCHEMA)
+        loads_b = avro_codec.compile_loads_batch(TRADE_WIRE_SCHEMA)
+        for pdf in batches:
+            yield pd.DataFrame(
+                loads_b(dumps_b([pdf[n].tolist() for n in _FIELDS]))
+            )
 
-        decoded = env.mapInPandas(rt, _DECODED_SPARK_SCHEMA)
+    decoded = env.mapInPandas(rt, _DECODED_SPARK_SCHEMA)
     return decoded.select(
         "trade_event_id",
         "symbol",
@@ -303,10 +204,8 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serialize the envelope under the V1 writer schema, decode under the
     V2 reader: the dropped field is skipped mid-record, the added field
     materializes its default — per-row, from the binary, with no
-    re-serialization. The decode stays on the Python resolver path
-    unconditionally (spark-avro's from_avro would need the writer schema
-    passed as avroSchema; the resolution demonstrated here is the part the
-    registry's BACKWARD gate promises)."""
+    re-serialization (the resolution is the part the registry's BACKWARD
+    gate promises)."""
     env = _wire_env(spark, sf_dir)
 
     def rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -620,8 +519,8 @@ def proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope exactly, so the oracle is the envelope SQL itself.
 
     Encode→decode run fused in one Arrow kernel (guide §4.1, same
-    rationale as avro_roundtrip's Python path — the wire bytes have no
-    consumer outside this kernel); proto has no JVM path to preserve."""
+    rationale as avro_roundtrip — the wire bytes have no consumer outside
+    this kernel)."""
     from ssiintegrateddatapipeline_spark.functions import proto_codec
 
     env = _wire_env(spark, sf_dir)

@@ -21,7 +21,6 @@ the same settings are what you'd want on a real cluster:
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
 
@@ -30,7 +29,6 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 DAEMON_MODULE = "ssiintegrateddatapipeline_spark.worker_daemon"
 
 _ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_VENDOR_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor")
 
 
 def _export_pythonpath(path: str) -> None:
@@ -41,26 +39,8 @@ def _export_pythonpath(path: str) -> None:
         os.environ["PYTHONPATH"] = path + (os.pathsep + existing if existing else "")
 
 
-def _install_protobuf_shim() -> None:
-    """transformWithStateInPandas needs google.protobuf in driver AND
-    workers. When the real package is absent, export the vendored mini
-    runtime (vendor/google/protobuf, just enough for StateMessage_pb2) on
-    the driver's sys.path and the workers' PYTHONPATH.
-    A protobuf-equipped cluster never sees the shim (probe-gated)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return  # real (or already-installed shim) runtime wins
-    except ImportError:
-        pass
-    if _VENDOR_DIR not in sys.path:
-        sys.path.insert(0, _VENDOR_DIR)
-    _export_pythonpath(_VENDOR_DIR)
-
-
 # workers (and DAEMON_MODULE itself) import the engine from this root
 _export_pythonpath(_ENGINE_ROOT)
-_install_protobuf_shim()
 
 
 def get_spark(

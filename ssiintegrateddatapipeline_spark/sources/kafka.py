@@ -15,8 +15,8 @@ Spark's Kafka source expresses the same semantics differently:
 ``auto.offset.reset`` becomes ``startingOffsets`` (Spark manages offsets in
 the checkpoint, not in a Kafka consumer group), ``group.id`` becomes the
 optional ``kafka.group.id`` passthrough (useful for ACL'd clusters), and the
-Avro boundary is the wire codec (operators/wire.py — JVM from_avro/to_avro
-when the spark-avro package is loaded, own Python codec otherwise).
+Avro boundary is the wire codec (operators/wire.py — the engine's own Avro
+codec, byte-compatible with any Avro reader or writer of the same schema).
 
 Offline there is no broker and no kafka-sql jar, so the factory builds and
 returns the fully-configured option maps and reader/writer builders without

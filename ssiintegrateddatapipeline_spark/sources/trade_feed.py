@@ -267,23 +267,26 @@ def _run_feed(spark, plan, output_mode, drained, timeout_s=120,
     shuffle partition, frozen into the checkpoint at first start; for the
     5-symbol feed domain, 32 stores are pure per-micro-batch setup/commit
     overhead (measured ~20% of the drain). Pass a small count to pin the
-    state layout — same contract (and same session-conf mutate/restore
-    caveat, single-threaded runners) as streaming.pipeline's
-    run_available_now."""
-    import shutil
+    state layout — the same pin (and the same session-conf caveat,
+    single-threaded runners) as streaming.pipeline's run_available_now,
+    and the same session checkpoint root, removed at interpreter exit."""
     import tempfile
     import time
     import uuid
 
+    # imported here, not at module level: Python workers import this
+    # module to run the data source and need none of the streaming engine
+    from ssiintegrateddatapipeline_spark.streaming.pipeline import (
+        _pinned_shuffle,
+        _session_ckpt_root,
+    )
+
     name = f"feed_out_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ssi_feed_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # hold the pin through the whole drain: the first micro-batch is
-        # planned asynchronously after start(), and that's where the
-        # state-partition count is frozen into the checkpoint
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    ckpt = tempfile.mkdtemp(dir=_session_ckpt_root())
+    # hold the pin through the whole drain: the first micro-batch is
+    # planned asynchronously after start(), and that's where the
+    # state-partition count is frozen into the checkpoint
+    with _pinned_shuffle(spark, state_partitions):
         q = (
             plan.writeStream.format("memory")
             .queryName(name)
@@ -309,9 +312,6 @@ def _run_feed(spark, plan, output_mode, drained, timeout_s=120,
         out = spark.table(name)
         # Materialize via Arrow (toPandas), not row-at-a-time Py4J collect.
         return spark.createDataFrame(out.toPandas(), out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _feed_stream(spark):

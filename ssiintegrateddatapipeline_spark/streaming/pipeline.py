@@ -597,11 +597,8 @@ def user_stats_plan(stream: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spark 4 arbitrary state: per-user profile via transformWithStateInPandas
-# (typed ValueState + MapState, the successor API to applyInPandasWithState)
-# with a capability probe — the API's Python side needs the protobuf
-# package; when absent (this sandbox) an applyInPandasWithState fallback
-# produces the identical output, so the contract query is green either way.
+# Per-user profile on the arbitrary-state API: one applyInPandasWithState
+# row per user, with the per-type counts folded into that row
 # ---------------------------------------------------------------------------
 
 _USER_PROFILE_SCHEMA = (
@@ -609,85 +606,13 @@ _USER_PROFILE_SCHEMA = (
     "min_ts TIMESTAMP, max_ts TIMESTAMP"
 )
 
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf in the Python
-    workers (pyspark/sql/streaming/proto); probe instead of assuming."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _make_user_profile_processor():
-    """Build the StatefulProcessor lazily (class body touches the
-    stateful-processor module, which imports fine without protobuf —
-    construction is deferred so the probe stays the single gate)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class UserProfileProcessor(StatefulProcessor):
-        """Running per-user profile: event count, value sum, event-time
-        span, distinct event types — the reference's per-topic mutable
-        dicts (kafka_consumer.py:41,108) as TYPED composite state: a
-        ValueState row for the scalars, a MapState for per-type counts
-        (state the size of |types|, not |events|)."""
-
-        def init(self, handle):
-            self._stats = handle.getValueState(
-                "stats", "events BIGINT, total DOUBLE, min_us BIGINT, max_us BIGINT"
-            )
-            self._types = handle.getMapState("type_counts", "t STRING", "c BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            events, total, min_us, max_us = (
-                self._stats.get() if self._stats.exists() else (0, 0.0, None, None)
-            )
-            for pdf in rows:
-                events += len(pdf)
-                total += float(pdf["value"].sum())
-                bmin, bmax = pdf["ts"].min(), pdf["ts"].max()
-                if pd.notna(bmin):
-                    us = int(bmin.value // 1000)
-                    min_us = us if min_us is None else min(min_us, us)
-                if pd.notna(bmax):
-                    us = int(bmax.value // 1000)
-                    max_us = us if max_us is None else max(max_us, us)
-                for t, c in pdf["event_type"].value_counts().items():
-                    prev = (
-                        self._types.getValue((t,))[0]
-                        if self._types.containsKey((t,))
-                        else 0
-                    )
-                    self._types.updateValue((t,), (prev + int(c),))
-            self._stats.update((events, total, min_us, max_us))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "events": [events],
-                    "total_value": [total],
-                    "n_types": [n_types],
-                    "min_ts": [pd.Timestamp(min_us, unit="us")],
-                    "max_ts": [pd.Timestamp(max_us, unit="us")],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return UserProfileProcessor()
-
-
 _PROFILE_STATE_SCHEMA = T.StructType(
     [
         T.StructField("events", T.LongType()),
         T.StructField("total", T.DoubleType()),
         T.StructField("min_us", T.LongType()),
         T.StructField("max_us", T.LongType()),
-        # MapState stand-in: sorted "type\tcount" lines (bounded by |types|)
+        # per-type counts as sorted "type\tcount" lines (bounded by |types|)
         T.StructField("types_tsv", T.StringType()),
     ]
 )
@@ -731,20 +656,10 @@ def _update_user_profile(key, pdf_iter, state: GroupState):
     )
 
 
-def user_profile_plan(stream: DataFrame, use_tws: bool | None = None) -> DataFrame:
-    """Per-user running profile on the arbitrary-state API: Spark 4's
-    transformWithStateInPandas when its Python protobuf dependency is
-    present, else the applyInPandasWithState equivalent (same output rows,
-    same per-key state partitioning)."""
-    if use_tws is None:
-        use_tws = tws_available()
-    if use_tws:
-        return stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_make_user_profile_processor(),
-            outputStructType=_USER_PROFILE_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+def user_profile_plan(stream: DataFrame) -> DataFrame:
+    """Per-user running profile (event count, value sum, event-time span,
+    distinct event types): the reference's per-topic mutable dicts
+    (kafka_consumer.py:41,108) as one state row per user."""
     return stream.groupBy("user_id").applyInPandasWithState(
         _update_user_profile,
         outputStructType=_USER_PROFILE_SCHEMA,
@@ -1243,33 +1158,12 @@ def streaming_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query for the arbitrary-state profile operator; on a
-    protobuf-equipped cluster this exercises transformWithStateInPandas
-    over the RocksDB state store (the API requires it), offline the
-    applyInPandasWithState fallback."""
-    use_tws = tws_available()
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(conf_key, None) if use_tws else None
-    if use_tws:
-        spark.conf.set(
-            conf_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        out = run_available_now(
-            user_profile_plan(events_stream(spark, sf_dir), use_tws),
-            output_mode="update",
-            dedup_keys=["user_id"],
-        )
-    finally:
-        # never leak the provider override into the session: later
-        # streaming queries must keep running on the session default
-        if use_tws:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
+    """Contract query for the arbitrary-state profile operator."""
+    out = run_available_now(
+        user_profile_plan(events_stream(spark, sf_dir)),
+        output_mode="update",
+        dedup_keys=["user_id"],
+    )
     return out.select(
         "user_id",
         "events",

@@ -6,7 +6,7 @@ making ``zipimport.zipimporter.invalidate_caches`` a no-op; the forked workers
 inherit that. As a submodule it first runs the package ``__init__``, so the
 daemon (and each forked worker) also has ``caches``, ``session`` and
 ``pyspark.sql`` loaded, and ``session``'s import-time ``PYTHONPATH`` export
-and protobuf-shim probe have run; pandas and pyarrow are not loaded.
+has run; pandas and pyarrow are not loaded.
 
 Why: every Python task (pandas UDF, ``mapInPandas``, Python data-source read)
 starts in ``pyspark.worker_util.setup_spark_files``, which ends with

@@ -16,7 +16,7 @@ import __spark_entry__ as entry_mod
 from ssiintegrateddatapipeline_spark import caches
 from ssiintegrateddatapipeline_spark.caches import clear_caches
 from ssiintegrateddatapipeline_spark.functions import twophase
-from ssiintegrateddatapipeline_spark.operators import dedup, store, wire
+from ssiintegrateddatapipeline_spark.operators import dedup, store
 from ssiintegrateddatapipeline_spark.sources import batch, files
 from ssiintegrateddatapipeline_spark.streaming import pipeline
 
@@ -147,13 +147,12 @@ def test_built_store_builds_once_under_concurrent_first_callers(spark):
 
 
 def test_registry_holds_only_the_kept_caches():
-    """Exactly six registered caches remain (see the caches module
+    """Exactly five registered caches remain (see the caches module
     docstring for why each stays), and queries() hands out each module's
     own callable — no prepared-plan wrapper between caller and query."""
     kept = [
         caches._EPHEMERAL,
         batch._LOAD_MEMO,
-        wire._JVM_AVRO_CACHE,
         files._RT_CACHE,
         pipeline._ONLINE_STAGE_CACHE,
         store._STORE_CACHE,

@@ -296,7 +296,10 @@ def test_provider_dispatch_columns_null_safe(spark):
     """sign_column_by / verify_column_by / sign_tamper_verify_column_by:
     per-row provider dispatch signs with the row's provider (tokens match
     _sign_for), the fused op rejects exactly the tampered rows, and a null
-    provider (an SSI-off config row) or a null token gives null."""
+    provider (an SSI-off config row), an unknown provider or a null token
+    gives null."""
+    import pytest
+
     from ssiintegrateddatapipeline_spark.operators import identity as I
 
     rows = [
@@ -305,6 +308,7 @@ def test_provider_dispatch_columns_null_safe(spark):
         ("BINANCE:SOLUSDT", "p2", "did:ethr:sepolia", False),
         ("BINANCE:BTCUSDT", "p3", None, False),
         ("BINANCE:ADAUSDT", "p4", "did:web", True),
+        ("BINANCE:XRPUSDT", "p5", "did:foo", False),
     ]
     df = spark.createDataFrame(
         rows, "symbol string, payload string, prov string, tamper boolean"
@@ -317,15 +321,23 @@ def test_provider_dispatch_columns_null_safe(spark):
         r = by_payload[payload]
         assert r.jwt == I._sign_for(sym, prov, {"claims": payload})
         assert r.verified is True
-    assert by_payload["p3"].jwt is None and by_payload["p3"].verified is None
+    for payload in ("p3", "p5"):
+        assert by_payload[payload].jwt is None
+        assert by_payload[payload].verified is None
 
     fused = I.sign_tamper_verify_column_by(df, "symbol", "payload", "tamper", "prov")
     verdicts = {r.payload: r.verified for r in fused.collect()}
-    assert verdicts == {"p0": True, "p1": True, "p2": True, "p3": None, "p4": False}
+    assert verdicts == {
+        "p0": True, "p1": True, "p2": True, "p3": None, "p4": False, "p5": None
+    }
 
-    no_token = spark.createDataFrame(
-        [("BINANCE:BTCUSDT", None, "did:key")],
+    # a null token, and a real token under an unknown provider
+    token = by_payload["p1"].jwt
+    unverifiable = spark.createDataFrame(
+        [("BINANCE:BTCUSDT", None, "did:key"), ("BINANCE:ETHUSDT", token, "did:foo")],
         "symbol string, jwt string, prov string",
     )
-    [r] = I.verify_column_by(no_token, "symbol", "jwt", "prov").collect()
-    assert r.verified is None
+    out = I.verify_column_by(unverifiable, "symbol", "jwt", "prov").collect()
+    assert [r.verified for r in out] == [None, None]
+    with pytest.raises(ValueError):
+        I._executor_keys("BINANCE:BTCUSDT", "did:foo")

@@ -457,24 +457,6 @@ def test_paginated_is_single_take_ordered_with_offset(spark, sf_dir):
     assert "Window" not in plan
 
 
-def test_wire_roundtrip_jvm_path_has_no_python_stage(spark, sf_dir):
-    """When the spark-avro jar is present, the wire round-trip must run
-    entirely JVM-side: no Python/Arrow eval stage in the plan. Offline
-    (jar absent) the probe routes to the Python codec and this pin is
-    skipped — see README 'Avro wire path'."""
-    import pytest
-
-    from ssiintegrateddatapipeline_spark.operators.wire import (
-        jvm_avro_available,
-    )
-
-    if not jvm_avro_available(spark):
-        pytest.skip("spark-avro jar absent; Python-codec fallback in use")
-    plan = _executed_plan(_QUERIES["wire_avro_roundtrip"](spark, sf_dir))
-    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
-        assert marker not in plan, marker
-
-
 def test_pq_codebooks_are_plan_time_literals(spark, sf_dir):
     """PQ sub-codebooks train driver-side at build time; the search
     plan must be literal lookup tables + a broadcast of the tiny query

@@ -1,5 +1,5 @@
-"""Arbitrary-state streaming operator: transformWithStateInPandas probe +
-applyInPandasWithState fallback (streaming/pipeline.user_profile_plan)."""
+"""Arbitrary-state streaming operator (streaming/pipeline.user_profile_plan)
+and the state-shape contract of every streaming contract query."""
 
 from __future__ import annotations
 
@@ -10,58 +10,29 @@ from pyspark.sql import functions as F
 from ssiintegrateddatapipeline_spark.streaming import pipeline as SP
 
 
-def test_tws_probe_is_boolean():
-    assert SP.tws_available() in (True, False)
-
-
-def test_fallback_profile_matches_batch_aggregate(spark, sf_dir):
-    """The applyInPandasWithState path must equal the plain batch
-    aggregate over the same replayed file."""
+def test_user_profile_matches_batch_aggregate(spark, sf_dir):
+    """The applyInPandasWithState profile must equal the plain batch
+    aggregate over the same replayed file, on all five output columns."""
     got = {
-        r.user_id: (r.events, r.n_types)
+        r.user_id: (r.events, r.total_value, r.n_types, r.min_ts, r.max_ts)
         for r in SP.streaming_user_profile(spark, sf_dir).collect()
     }
     from ssiintegrateddatapipeline_spark.sources.batch import load_table
 
     want = {
-        r.user_id: (r.events, r.n_types)
+        r.user_id: (r.events, r.total_value, r.n_types, r.min_ts, r.max_ts)
         for r in load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("events"),
+            F.round(F.sum("value"), 4).alias("total_value"),
             F.countDistinct("event_type").alias("n_types"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
         )
         .collect()
     }
     assert got == want and len(got) > 0
-
-
-@pytest.mark.skipif(
-    not SP.tws_available(), reason="google.protobuf absent: tws path offline"
-)
-def test_tws_path_matches_fallback(spark, sf_dir):
-    """Where protobuf is present, the transformWithStateInPandas path must
-    produce exactly the fallback's rows (RocksDB store required by the
-    API)."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    tws = SP.run_available_now(
-        SP.user_profile_plan(SP.events_stream(spark, sf_dir), use_tws=True),
-        output_mode="update",
-        dedup_keys=["user_id"],
-    )
-    fb = SP.run_available_now(
-        SP.user_profile_plan(SP.events_stream(spark, sf_dir), use_tws=False),
-        output_mode="update",
-        dedup_keys=["user_id"],
-    )
-    canon = lambda df: sorted(  # noqa: E731
-        (r.user_id, r.events, round(r.total_value, 4), r.n_types, r.min_ts, r.max_ts)
-        for r in df.collect()
-    )
-    assert canon(tws) == canon(fb)
 
 
 # ---------------------------------------------------------------------------
@@ -115,10 +86,9 @@ _STATE_BOUNDS = {
     # entity, not on arrivals; the same footprint Prometheus counters have)
     "streaming_top_users": lambda s, n: s["n_users"] + 8,
     "streaming_user_stats": lambda s, n: s["n_users"] + 8,
-    # tws path: ValueState row per user + MapState row per (user, type) —
-    # still O(domain): the type vocabulary is fixed. (The
-    # applyInPandasWithState fallback packs it all in n_users rows.)
-    "streaming_user_profile": lambda s, n: s["n_users"] * (1 + s["n_types"]) + 8,
+    # one state row per user; the per-type counts inside it are bounded
+    # by the fixed type vocabulary
+    "streaming_user_profile": lambda s, n: s["n_users"] + 8,
     # last-event carry per user (the online transition matrix)
     "streaming_event_transitions": lambda s, n: s["n_users"] + 8,
     # one store row per DID (== per user); the per-item json blob inside

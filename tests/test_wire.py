@@ -174,96 +174,6 @@ def test_compiled_codec_matches_interpreted(s, n, d, opt, tags, attrs, b):
     assert C.loads(raw_comp, _RECORD_SCHEMA) == value
 
 
-# --- JVM avro fast path (probe + schema plumbing) --------------------------
-
-
-def test_jvm_avro_probe_is_cached_and_false_offline(spark):
-    """Offline the spark-avro jar is absent: the probe must report False
-    (Python-codec fallback) and cache the answer per application."""
-    from ssiintegrateddatapipeline_spark.operators import wire
-
-    wire._JVM_AVRO_CACHE.clear()
-    assert wire.jvm_avro_available(spark) is False
-    app = spark.sparkContext.applicationId
-    assert wire._JVM_AVRO_CACHE == {app: False}
-    # second call hits the cache (no re-probe): poison the probe to prove it
-    assert wire.jvm_avro_available(spark) is False
-
-
-def test_plain_wire_schema_strips_logical_types_only():
-    from ssiintegrateddatapipeline_spark.operators import wire
-
-    plain = wire.TRADE_WIRE_SCHEMA_PLAIN
-    names = [f["name"] for f in plain["fields"]]
-    assert names == [f["name"] for f in wire.TRADE_WIRE_SCHEMA["fields"]]
-    for f in plain["fields"]:
-        assert "logicalType" not in str(f["type"])
-    # timestamp fields became bare longs; the union field is untouched
-    by_name = {f["name"]: f["type"] for f in plain["fields"]}
-    assert by_name["event_ts_us"] == "long"
-    assert by_name["start_ts_us"] == "long"
-    assert by_name["trade_condition"] == ["null", {"type": "array", "items": "string"}]
-    # original schema unchanged (deep-copied)
-    assert wire.TRADE_WIRE_SCHEMA["fields"][5]["type"]["logicalType"] == "timestamp-micros"
-
-
-def test_avro_serialize_explicit_python_path_matches_default(spark, sf_dir):
-    """use_jvm=False must be byte-identical to the offline default path."""
-    from pyspark.sql import functions as F
-
-    from ssiintegrateddatapipeline_spark.operators import wire
-
-    env = wire.trade_envelope(spark, sf_dir).select(
-        "trade_event_id",
-        "symbol",
-        "price",
-        "volume",
-        "trade_condition",
-        F.unix_micros("event_timestamp").alias("event_ts_us"),
-        F.unix_micros("start_timestamp").alias("start_ts_us"),
-        "e2e_latency_secs",
-    ).limit(50)
-    a = sorted((r.key, bytes(r.value)) for r in wire.avro_serialize(env).collect())
-    b = sorted(
-        (r.key, bytes(r.value))
-        for r in wire.avro_serialize(env, use_jvm=False).collect()
-    )
-    assert a == b and len(a) == 50
-
-
-def test_strip_logical_recurses_into_unions_and_nesting():
-    """logicalType nested inside a union branch, array items, or a nested
-    record must be stripped too — otherwise the JVM from_avro path would
-    surface TimestampType where the Python codec surfaces long."""
-    from ssiintegrateddatapipeline_spark.operators.wire import _strip_logical
-
-    schema = {
-        "type": "record",
-        "name": "R",
-        "fields": [
-            {"name": "top", "type": {"type": "long", "logicalType": "timestamp-micros"}},
-            {"name": "u", "type": ["null", {"type": "long", "logicalType": "timestamp-micros"}]},
-            {"name": "arr", "type": {"type": "array", "items": {"type": "int", "logicalType": "date"}}},
-            {
-                "name": "nested",
-                "type": {
-                    "type": "record",
-                    "name": "Inner",
-                    "fields": [
-                        {"name": "t", "type": {"type": "long", "logicalType": "time-micros"}}
-                    ],
-                },
-            },
-        ],
-    }
-    plain = _strip_logical(schema)
-    assert plain["fields"][0]["type"] == "long"
-    assert plain["fields"][1]["type"] == ["null", "long"]
-    assert plain["fields"][2]["type"]["items"] == "int"
-    assert plain["fields"][3]["type"]["fields"][0]["type"] == "long"
-    assert "logicalType" not in repr(plain)
-
-
 @given(
     symbol=st.sampled_from(
         ["BINANCE:BTCUSDT", "BINANCE:ETHUSDT", "X", "A" * 100]
