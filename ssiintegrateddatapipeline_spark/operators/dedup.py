@@ -32,7 +32,7 @@ from ssiintegrateddatapipeline_spark.functions.text_funcs import (
     with_simhash32,
     word_shingles,
 )
-from ssiintegrateddatapipeline_spark.sources.batch import load_table
+from ssiintegrateddatapipeline_spark.sources.batch import load_table, spread
 
 N_MINHASH = 8
 N_BANDS = 4  # 2 rows per band
@@ -65,9 +65,7 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition first: the raw scan is a handful of parquet splits, but the
     # signature computation is expression-heavy — spread it across all cores
     # (at production scale the scan itself would already be wide).
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     toks = tokens(F.col("text"))
     return with_minhash_signature(
         d.select("doc_id", word_shingles(toks).alias("_shingles")),
@@ -231,9 +229,7 @@ def near_dup_clusters(
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 32-bit SimHash (token-hash bit-vote), plus a 8-bit
     prefix bucket usable for hamming-distance blocking."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     return (
         with_simhash32(d.select("doc_id", "text"), tokens(F.col("text")))
         .select("doc_id", "simhash")
@@ -350,7 +346,6 @@ def prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-bounded verify join. The persisted shingle table is reused
     by all three stages."""
     from ssiintegrateddatapipeline_spark.caches import track
-    from ssiintegrateddatapipeline_spark.sources.batch import spread
 
     # spread() first: the corpus is a handful of parquet splits but the
     # shingle materialization is the CPU wall — fan it across all cores
@@ -394,7 +389,6 @@ def prefix_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     density, and the output is O(docs x k). The final per-doc ranking
     rides the two-level top-k device (functions/topk.py)."""
     from ssiintegrateddatapipeline_spark.functions.topk import two_level_topk
-    from ssiintegrateddatapipeline_spark.sources.batch import spread
 
     k = PREFIX_TOPK_K
     d = spread(load_table(spark, sf_dir, "documents"))

@@ -230,9 +230,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (
         d.where(F.length("text") >= WINNOW_K + WINNOW_W - 1)
         .select("doc_id", "text")
-        .repartition(
-            d.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
-        )
+        .transform(spread, "doc_id")
         .select("doc_id", codes.alias("codes"))
     )
     grams = per_doc.select(

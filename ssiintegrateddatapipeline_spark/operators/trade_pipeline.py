@@ -27,8 +27,7 @@ from ssiintegrateddatapipeline_spark.operators.identity import (
     SYMBOLS,
     build_identity_dim,
 )
-from ssiintegrateddatapipeline_spark.sources.batch import load_table
-from ssiintegrateddatapipeline_spark.sources.batch import local_frame
+from ssiintegrateddatapipeline_spark.sources.batch import load_table, local_frame, spread
 
 REQUIRED_PERMISSIONS = (
     "createVerifiableCredential",
@@ -184,7 +183,7 @@ def sign_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         # the crypto UDF stage must be wide: the scan is 1-2 parquet splits,
         # which would serialize all signing onto 1-2 Python workers
-        .repartition(spark.sparkContext.defaultParallelism)
+        .transform(spread)
         .select(
             "event_id",
             _symbol_col().alias("symbol"),
@@ -594,7 +593,6 @@ def eth_tx_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F811
 
     from ssiintegrateddatapipeline_spark.operators.identity import SYMBOLS
-    from ssiintegrateddatapipeline_spark.sources.batch import load_table
 
     arr = F.array(*[F.lit(s) for s in SYMBOLS])
     ev = (
@@ -609,7 +607,7 @@ def eth_tx_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round(F.col("value") * 1e6).cast("long") * F.lit(1_000_000))
             .alias("value_wei"),
         )
-        .repartition(spark.sparkContext.defaultParallelism, F.col("event_id"))
+        .transform(spread, "event_id")
     )
 
     def sign(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:

@@ -337,11 +337,11 @@ def health_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary (nested record branch of the codec), decode, flatten. The
     oracle recomputes the synthesis — equality proves the nested
     encode/decode is lossless on the engine surface."""
-    from ssiintegrateddatapipeline_spark.sources.batch import load_table
+    from ssiintegrateddatapipeline_spark.sources.batch import load_table, spread
 
     ev = (
         load_table(spark, sf_dir, "events")
-        .repartition(spark.sparkContext.defaultParallelism)
+        .transform(spread)
         .select(
             F.md5(F.col("event_id").cast("string")).alias("id"),
             F.concat(F.lit("patient-"), F.col("user_id")).alias("patient_id"),
@@ -414,7 +414,7 @@ def jwe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sign/verify matrix)."""
     from ssiintegrateddatapipeline_spark.functions.text_funcs import md5_int32
     from ssiintegrateddatapipeline_spark.operators.identity import SYMBOLS
-    from ssiintegrateddatapipeline_spark.sources.batch import load_table
+    from ssiintegrateddatapipeline_spark.sources.batch import load_table, spread
 
     arr = F.array(*[F.lit(s) for s in SYMBOLS])
     ev = (
@@ -427,7 +427,7 @@ def jwe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("props").alias("payload"),
         )
-        .repartition(spark.sparkContext.defaultParallelism, F.col("event_id"))
+        .transform(spread, "event_id")
     )
 
     @F.pandas_udf("string")
@@ -494,23 +494,6 @@ def proto_serialize(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(enc, "key string, value binary")
-
-
-def proto_deserialize(df: DataFrame) -> DataFrame:
-    """(key, value) -> decoded envelope columns (spec-general tag walk)."""
-    from ssiintegrateddatapipeline_spark.functions import proto_codec
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [proto_codec.decode_trade(v) for v in pdf["value"]]
-            yield pd.DataFrame.from_records(recs, columns=_FIELDS)
-
-    schema = (
-        "trade_event_id string, symbol string, price double, volume double,"
-        " trade_condition array<string>, event_ts_us long, start_ts_us long,"
-        " e2e_latency_secs double"
-    )
-    return df.mapInPandas(dec, schema)
 
 
 def proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,12 +43,6 @@ class PipelineConfig:
     cache_did: bool = True
     processing_mode: str = "async"
 
-    @property
-    def label(self) -> str:
-        v = "validated" if self.ssi_validation else "raw"
-        c = "cached" if self.cache_did else "uncached"
-        return f"{self.did_provider}|{v}|{c}|{self.processing_mode}"
-
 
 # the reference's 6 documented option sets (README.md:96-145):
 # 1 did:web/async/uncached, 2 did:web/sync/cached, 3 did:key/sync/uncached,
@@ -67,21 +61,13 @@ def build_pipeline(
     spark: SparkSession,
     sf_dir: str,
     config: PipelineConfig,
-    sample_hex_lt: str | None = None,
 ) -> DataFrame:
     """The full dataflow for one configuration. With SSI on, each event is
     signed and verified (tampered subset fails, as in trade_sign_verify);
     with SSI off the credential stage is skipped entirely — two plan
     variants, not a per-row branch, matching the reference's startup-time
-    routing.
-
-    ``sample_hex_lt``: optional deterministic hash-sample applied BEFORE
-    the crypto stage — keep rows whose trade_event_id (an md5 hex) starts
-    below the given hex digit ('1' keeps 1/16 = 6.25%). Used by the
-    provider matrix so per-row ECDSA doesn't dominate a benchmark sweep."""
+    routing."""
     env = trade_envelope(spark, sf_dir)
-    if sample_hex_lt is not None:
-        env = env.where(F.substring("trade_event_id", 1, 1) < F.lit(sample_hex_lt))
     if config.ssi_validation:
         # fan the narrow projection across all cores before the crypto UDF
         # stage — the local scan is a single parquet split (see spread())

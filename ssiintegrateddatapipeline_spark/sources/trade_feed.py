@@ -191,13 +191,12 @@ def feed_ingest(spark, sf_dir: str):
 def feed_ingest_streaming(spark, sf_dir: str):
     """Same plan through the offset-tracked stream reader: micro-batches of
     rows_per_batch advance the offset until the feed is drained (real
-    multi-batch offset progression — availableNow would snapshot
-    latestOffset once and stop after one batch). Result must equal the
-    batch read exactly. Uses the shared drain runner (append mode, sink
-    row count as the progress predicate)."""
-    expected = _expected_trades()
-    plan = _ingest_projection(_feed_stream(spark))
-    return _run_feed(spark, plan, "append", lambda df: df.count() >= expected)
+    multi-batch offset progression). The reader paces its ``latestOffset``
+    answers, so an ``availableNow`` trigger would snapshot the first one
+    and stop after one batch — that is why the engine's one drive
+    (``streaming.pipeline._drive``) runs ``processAllAvailable`` instead.
+    Result must equal the batch read exactly."""
+    return _run_feed(_ingest_projection(_feed_stream(spark)), "append")
 
 
 def trade_vwap(spark, sf_dir: str):
@@ -253,65 +252,18 @@ def _vwap_finalize(agg):
     )
 
 
-def _run_feed(spark, plan, output_mode, drained, timeout_s=120,
-              state_partitions=None):
-    """Drain the offset-tracked feed stream into a memory sink and return
-    the final snapshot as a batch DataFrame. ``drained(df)`` is the
-    progress predicate over the sink (row count for append projections,
-    the aggregate's total trade count for complete-mode state — the sink
-    row count there is fixed by the group-key domain). Raises on timeout
-    rather than returning a silently partial snapshot (a stalled drain
-    would otherwise surface as a baffling value diff downstream).
-
-    ``state_partitions``: stateful plans instantiate one state store per
-    shuffle partition, frozen into the checkpoint at first start; for the
-    5-symbol feed domain, 32 stores are pure per-micro-batch setup/commit
-    overhead (measured ~20% of the drain). Pass a small count to pin the
-    state layout — the same pin (and the same session-conf caveat,
-    single-threaded runners) as streaming.pipeline's run_available_now,
-    and the same session checkpoint root, removed at interpreter exit."""
-    import tempfile
-    import time
-    import uuid
-
+def _run_feed(plan, output_mode):
+    """Drain the offset-tracked feed stream through the engine's drive into
+    a memory sink and return the final snapshot as a batch DataFrame. The
+    feed's state domain is 5 symbols (or symbol x minute), so stateful
+    plans pin 8 state stores, not 32."""
     # imported here, not at module level: Python workers import this
     # module to run the data source and need none of the streaming engine
     from ssiintegrateddatapipeline_spark.streaming.pipeline import (
-        _pinned_shuffle,
-        _session_ckpt_root,
+        run_available_now,
     )
 
-    name = f"feed_out_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(dir=_session_ckpt_root())
-    # hold the pin through the whole drain: the first micro-batch is
-    # planned asynchronously after start(), and that's where the
-    # state-partition count is frozen into the checkpoint
-    with _pinned_shuffle(spark, state_partitions):
-        q = (
-            plan.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = time.time() + timeout_s
-        ok = False
-        while time.time() < deadline:
-            if drained(spark.table(name)):
-                ok = True
-                break
-            time.sleep(0.3)
-        q.stop()
-        q.awaitTermination()
-        if not ok:
-            raise TimeoutError(
-                f"trade feed drain incomplete after {timeout_s}s "
-                f"(query {name}) — refusing to return a partial snapshot"
-            )
-        out = spark.table(name)
-        # Materialize via Arrow (toPandas), not row-at-a-time Py4J collect.
-        return spark.createDataFrame(out.toPandas(), out.schema)
+    return run_available_now(plan, output_mode, state_partitions=8)
 
 
 def _feed_stream(spark):
@@ -325,23 +277,11 @@ def _feed_stream(spark):
     )
 
 
-def _expected_trades() -> int:
-    return FEED_N - len(range(0, FEED_N, PING_EVERY))
-
-
 def _run_feed_complete(spark, plan_builder):
     """Complete-mode aggregate drain (streaming VWAP / OHLC twins)."""
-    from pyspark.sql import functions as F
-
-    expected = _expected_trades()
-
-    def drained(df) -> bool:
-        row = df.agg(F.sum("n_trades")).first()
-        return row[0] is not None and row[0] >= expected
-
-    plan = plan_builder(_ingest_projection(_feed_stream(spark)))
-    # 5-symbol (or symbol-x-minute) state domain: 8 state stores, not 32
-    return _run_feed(spark, plan, "complete", drained, state_partitions=8)
+    return _run_feed(
+        plan_builder(_ingest_projection(_feed_stream(spark))), "complete"
+    )
 
 
 def streaming_trade_vwap(spark, sf_dir: str):
@@ -599,18 +539,7 @@ def streaming_trade_realized_vol(spark, sf_dir: str):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    expected_deltas = _expected_trades() - 5  # first trade per symbol: no lag
-
-    def drained(df) -> bool:
-        row = (
-            df.groupBy("symbol")
-            .agg(F.max("n_deltas").alias("n"))
-            .agg(F.sum("n"))
-            .first()
-        )
-        return row[0] is not None and row[0] >= expected_deltas
-
-    snap = _run_feed(spark, plan, "update", drained, state_partitions=8)
+    snap = _run_feed(plan, "update")
     final = (
         snap.groupBy("symbol")
         .agg(F.max_by(F.struct("n_deltas", "ss"), "n_deltas").alias("s"))
@@ -656,21 +585,6 @@ def trade_silence_gaps(spark, sf_dir: str):
         )
         .where(F.col("gap_start").isNotNull() & (F.col("gap_ms") > GAP_MS))
     )
-
-
-def _expected_gap_count() -> int:
-    """Deterministic replay of the slot grid: per symbol (slot % 5), count
-    consecutive trade pairs more than GAP_MS apart (slots are 250 ms)."""
-    gaps = 0
-    last: dict[int, int] = {}
-    for i in range(FEED_N):
-        if i % PING_EVERY == 0:
-            continue  # ping frame, dropped by the type filter
-        s = i % 5
-        if s in last and (i - last[s]) * 250 > GAP_MS:
-            gaps += 1
-        last[s] = i
-    return gaps
 
 
 def streaming_trade_gaps(spark, sf_dir: str):
@@ -744,11 +658,7 @@ def streaming_trade_gaps(spark, sf_dir: str):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    expected = _expected_gap_count()
-    return _run_feed(
-        spark, plan, "append", lambda df: df.count() >= expected,
-        state_partitions=8,
-    )
+    return _run_feed(plan, "append")
 
 
 QUERIES = {

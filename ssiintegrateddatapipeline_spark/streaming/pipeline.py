@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ssiintegrateddatapipeline_spark.sources.batch import load_table
+from ssiintegrateddatapipeline_spark.sources.batch import load_table, spread
 from ssiintegrateddatapipeline_spark.operators.analytics import (
     P95_BUCKETS,
     _P95_ORACLE as _BATCH_P95_ORACLE,
@@ -434,7 +434,7 @@ def streaming_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     burn-rate twin's hour gate. State: distinct (class, user) pairs —
     bounded by the user x class domain, the same footprint precedent as
     the user-stats counters; it never grows with re-arrivals of the same
-    pair. Oracle: shared with the batch audit (the availableNow drain
+    pair. Oracle: shared with the batch audit (the drain
     sees the whole table, so the final complete-mode answer IS the batch
     answer)."""
     from ssiintegrateddatapipeline_spark.operators.profiling import (
@@ -772,14 +772,44 @@ def _record_progress(query) -> None:
         LAST_QUERY_DURATIONS = []
 
 
+def _drive(writer, tag: str, ckpt: str | None = None) -> None:
+    """Run a configured ``writeStream`` until its source is drained: the
+    one way the engine executes a streaming query.
+
+    ``processAllAvailable`` returns only after a trigger finds no new data
+    (and no pending no-data batch), so a paced source — the trade feed's
+    ``rowsPerBatch``, ``versioned_cdf``'s ``versionsPerBatch`` — is read to
+    its end. ``availableNow`` would fix its end offset from the source's
+    first ``latestOffset`` answer, which a paced Python reader gives as one
+    batch's worth (PySpark's ``DataSourceStreamReader`` has no
+    admission-control hook), and return a partial snapshot.
+
+    ``ckpt``: a fixed checkpoint root, for drives that resume; default a
+    fresh dir under the session root (offsets and state are
+    query-private)."""
+    q = (
+        writer.option(
+            "checkpointLocation", ckpt or tempfile.mkdtemp(dir=_session_ckpt_root())
+        )
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    _record_progress(q)
+    _capture_stream_plan(q, tag)
+
+
 def run_available_now(
     plan: DataFrame,
     output_mode: str = "complete",
     dedup_keys: list[str] | None = None,
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Execute a streaming plan with ``trigger(availableNow=True)`` into a
-    memory sink and return the materialized result as a batch DataFrame.
+    """Drain a streaming plan (``_drive``) into a memory sink and return
+    the materialized result as a batch DataFrame.
 
     ``update`` mode may emit a row per micro-batch per key; pass
     ``dedup_keys`` to keep only each key's final row (latest ``events``).
@@ -794,28 +824,22 @@ def run_available_now(
     inheriting the session shuffle conf.
 
     Note: pinning mutates the session-global ``spark.sql.shuffle.partitions``
-    around ``start()`` (restored in ``finally``). The engine's runners are
-    single-threaded per session — a concurrent plan built in another thread
-    of the SAME session during that window would inherit the pinned value.
+    for the whole drive (restored on exit): the first micro-batch is
+    planned after ``start()``, and that is where the state-partition count
+    is frozen into the checkpoint. The engine's runners are
+    single-threaded per session — a concurrent plan built in another
+    thread of the SAME session during that window would inherit the
+    pinned value.
     """
     spark = plan.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    # fresh checkpoint subdir per query (offsets/state are query-private)
-    # under ONE session root cleaned at interpreter exit — the recursive
-    # delete of state/offset files stays OUT of the measured path
-    ckpt = tempfile.mkdtemp(dir=_session_ckpt_root())
     with _pinned_shuffle(spark, state_partitions):
-        q = (
+        _drive(
             plan.writeStream.format("memory")
             .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode(output_mode),
+            "sink",
         )
-        q.awaitTermination()
-        _record_progress(q)
-        _capture_stream_plan(q, "sink")
     out = spark.table(name)
     if dedup_keys:
         out = out.groupBy(*dedup_keys).agg(
@@ -834,8 +858,8 @@ def run_foreach_batch(
     plan: DataFrame,
     per_batch,
 ) -> DataFrame:
-    """Execute a STATELESS streaming plan with ``trigger(availableNow=True)``
-    through ``foreachBatch``, applying ``per_batch`` (a batch-DataFrame →
+    """Drain a STATELESS streaming plan (``_drive``) through
+    ``foreachBatch``, applying ``per_batch`` (a batch-DataFrame →
     batch-DataFrame transform) to each micro-batch and APPENDING its rows to
     a parquet spool, then return the spool as a batch DataFrame.
 
@@ -850,7 +874,6 @@ def run_foreach_batch(
     tests/test_streaming_state.py).
     """
     spark = plan.sparkSession
-    ckpt = tempfile.mkdtemp(dir=_session_ckpt_root())
     spool = os.path.join(tempfile.mkdtemp(dir=_session_ckpt_root()), "out")
     schema: list = []
 
@@ -861,15 +884,7 @@ def run_foreach_batch(
         out.write.mode("append").parquet(spool)
         _capture_batch_plan(out, "foreach_batch")
 
-    q = (
-        plan.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress(q)
-    _capture_stream_plan(q, "source")
+    _drive(plan.writeStream.foreachBatch(_emit), "source")
     if not schema:  # zero micro-batches: empty result, schema from a probe
         return per_batch(spark.createDataFrame([], plan.schema)).limit(0)
     return spark.read.schema(schema[0]).parquet(spool)
@@ -916,7 +931,7 @@ def streaming_sign_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("props").alias("payload"),
         (F.col("event_id") % 50 == 0).alias("tampered"),
         F.lit("did:key").alias("provider"),
-    ).repartition(spark.sparkContext.defaultParallelism, F.col("event_id"))
+    ).transform(spread, "event_id")
     verified = sign_tamper_verify_column_by(
         ev, "symbol", "payload", "tampered", "provider"
     )
@@ -980,7 +995,7 @@ def streaming_provider_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("props").alias("payload"),
             (F.col("event_id") % 50 == 0).alias("tampered"),
         )
-        .repartition(spark.sparkContext.defaultParallelism, F.col("event_id"))
+        .transform(spread, "event_id")
     )
     pairs = list(
         dict.fromkeys((c.did_provider, c.ssi_validation) for c in OPTION_SETS)
@@ -1140,9 +1155,7 @@ def streaming_cms_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan task (one core); the repartition fans it across the session's
     # parallelism before the hash work, mirroring the batch spread()
     # idiom (measured: addBatch 1.9 s -> 0.75 s at sf0.1/local[32]).
-    src = events_stream(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    src = spread(events_stream(spark, sf_dir))
     return run_available_now(cms_grid_plan(src), state_partitions=2)
 
 
@@ -1342,7 +1355,7 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents_stream(spark, sf_dir)
         .where(F.col("doc_id") % 2 == 1)
         .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
+        .transform(spread, "doc_id")
     )
 
     def decide(batch: DataFrame) -> DataFrame:
@@ -1406,7 +1419,7 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             predicted_lang_col(cnt).alias("predicted_lang"),
             F.greatest(*cnt.values()).alias("max_markers"),
         )
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
+        .transform(spread, "doc_id")
     )
     def decide(batch: DataFrame) -> DataFrame:
         tally = batch.groupBy("doc_id").agg(
@@ -1459,9 +1472,6 @@ ONLINE_DEDUP_COMPACT_EVERY = 8  # merge index delta files once this many exist
 # driver-side, skipping the parquet commit protocol; above it the delta
 # takes the distributed write path (the 100 TB shape)
 ONLINE_SPOOL_MAX_ROWS = 2_000_000
-
-# per-batch triggerExecution millis of the most recent online-dedup drive
-LAST_RUN_BATCH_MS: list = []
 
 
 def _online_stage(spark: SparkSession, sf_dir: str, n: int) -> str:
@@ -1683,24 +1693,7 @@ def _online_dedup_drive(
     # the per-batch joins/aggs move a few thousand rows: 32 shuffle
     # partitions are pure task overhead x (jobs x batches)
     with _pinned_shuffle(spark, 8):
-        q = (
-            banded.writeStream.foreachBatch(_emit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress(q)
-        _capture_stream_plan(q, "source")
-        # per-batch trigger durations for the long-ingest probe
-        # (tools/online_dedup_probe.py asserts they stay flat under
-        # delta compaction)
-        global LAST_RUN_BATCH_MS
-        LAST_RUN_BATCH_MS = [
-            p["durationMs"].get("triggerExecution")
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) or p.get("batchId") is not None
-        ]
+        _drive(banded.writeStream.foreachBatch(_emit), "source", ckpt=ckpt)
     return spark.read.parquet(os.path.join(spool, "b*"))
 
 
@@ -1758,9 +1751,7 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cents = _trained_centroids(spark, sf_dir)  # batch train, once per call
-    stream = embeddings_stream(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism, F.col("vec_id")
-    )
+    stream = spread(embeddings_stream(spark, sf_dir), "vec_id")
     d = _dots_for(F.col("embedding"), cents)
     assigned = stream.select(
         "vec_id",
@@ -2001,17 +1992,13 @@ def streaming_store_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _merge(bdf: DataFrame, bid: int) -> None:
         store_merge_batch(spark, table_path, bdf, bid)
 
-    q = (
+    _drive(
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", os.path.join(stage_root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(_merge),
+        "source",
     )
-    q.awaitTermination()
-    _record_progress(q)
     t = VersionedTable(spark, table_path)
     return t.snapshot().withColumn(
         "table_version", F.lit(t.latest_version()).cast("int")
@@ -2044,8 +2031,6 @@ def streaming_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The drive runs per invocation: every call streams the full version
     history into a fresh scratch sink."""
-    import time
-
     from ssiintegrateddatapipeline_spark.operators.store import _built_store
     from ssiintegrateddatapipeline_spark.sources.versioned import (
         VersionedTable,
@@ -2092,26 +2077,11 @@ def streaming_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             bdf.unpersist()
 
-    q = (
-        plan.writeStream.foreachBatch(_drain)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(dir=_session_ckpt_root()),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 120
-    while time.time() < deadline and latest not in seen:
-        time.sleep(0.05)
-    q.stop()
-    q.awaitTermination()
-    _record_progress(q)
-    _capture_stream_plan(q, "source")
+    _drive(plan.writeStream.foreachBatch(_drain), "source")
     if latest not in seen:
-        raise TimeoutError(
-            "store CDF stream incomplete after 120s — refusing to "
-            "return a partial change feed"
+        raise RuntimeError(
+            f"store CDF stream drained without version {latest} — "
+            "refusing to return a partial change feed"
         )
     return VersionedTable(spark, sink_path).snapshot()
 
@@ -2132,8 +2102,6 @@ def streaming_store_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit's touched files; the delete key-list is bounded by the
     commit's delete count (collected driver-side per batch, never the
     table)."""
-    import time
-
     from ssiintegrateddatapipeline_spark.operators.store import _built_store
     from ssiintegrateddatapipeline_spark.sources.versioned import (
         VersionedTable,
@@ -2196,29 +2164,17 @@ def streaming_store_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             bdf.unpersist()
 
-    q = (
+    _drive(
         spark.readStream.format("versioned_cdf")
         .option("path", src.path)
         .load()
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(dir=_session_ckpt_root()),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
+        .writeStream.foreachBatch(_apply),
+        "source",
     )
-    deadline = time.time() + 120
-    while time.time() < deadline and latest not in seen:
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination()
-    _record_progress(q)
-    _capture_stream_plan(q, "source")
     if latest not in seen:
-        raise TimeoutError(
-            "CDC replica drain incomplete after 120s — refusing "
-            "to return a partial replica"
+        raise RuntimeError(
+            f"CDC replica drained without source version {latest} — "
+            "refusing to return a partial replica"
         )
     t = VersionedTable(spark, rp)
     return t.snapshot().withColumn(
@@ -2736,7 +2692,7 @@ from ssiintegrateddatapipeline_spark.operators.metrics import (  # noqa: E402
 
 ORACLES["streaming_burn_rate"] = _METRIC_ORACLES["metrics_burn_rate"]
 
-# the availableNow drain sees the whole events table, so the final
+# the drain sees the whole events table, so the final
 # complete-mode answer equals the batch audit exactly — one oracle
 from ssiintegrateddatapipeline_spark.operators.profiling import (  # noqa: E402
     ORACLES as _PROF_ORACLES,

@@ -3,9 +3,12 @@ streaming, and the ingest projection (rename map, type filter, default-fill)."""
 
 from __future__ import annotations
 
+import ast
+
 from pyspark.sql import functions as F
 
 from ssiintegrateddatapipeline_spark.sources import trade_feed as TF
+from ssiintegrateddatapipeline_spark.streaming import pipeline as SP
 
 
 def test_batch_read_is_partitioned(spark):
@@ -41,6 +44,18 @@ def test_stream_equals_batch(spark):
     assert got == want
 
 
+def test_feed_drain_records_progress(spark):
+    """The feed drain reports its stream progress like every engine query:
+    one record per micro-batch of rowsPerBatch, ending at the feed end."""
+    SP.LAST_QUERY_PROGRESS = None
+    SP.LAST_QUERY_DURATIONS = []
+    TF.feed_ingest_streaming(spark, "")
+    assert len(SP.LAST_QUERY_DURATIONS) >= TF.FEED_N // 500
+    # PySpark keeps a source offset as str() of its parsed JSON dict
+    end = SP.LAST_QUERY_PROGRESS["sources"][0]["endOffset"]
+    assert ast.literal_eval(end) == {"index": TF.FEED_N}
+
+
 def test_stream_progresses_in_micro_batches(spark):
     """The offset must advance in rows_per_batch steps — real multi-batch
     progression, not a single snapshot."""
@@ -58,7 +73,18 @@ def test_gap_monitor_finds_exactly_the_ping_holes(spark):
     predecessor for its symbol) is a 2500 ms hole in a 1250 ms cadence."""
     gaps = TF.trade_silence_gaps(spark, "").collect()
     n_pings = len(range(0, TF.FEED_N, TF.PING_EVERY))
-    assert len(gaps) == n_pings - 1 == TF._expected_gap_count()
+    # independent replay of the slot grid: per symbol (slot % 5), count
+    # consecutive trade pairs more than GAP_MS apart (slots are 250 ms)
+    replayed = 0
+    last: dict[int, int] = {}
+    for i in range(TF.FEED_N):
+        if i % TF.PING_EVERY == 0:
+            continue  # ping frame, dropped by the type filter
+        s = i % 5
+        if s in last and (i - last[s]) * 250 > TF.GAP_MS:
+            replayed += 1
+        last[s] = i
+    assert len(gaps) == n_pings - 1 == replayed
     assert all(g.gap_ms == 2500 for g in gaps)
 
 

@@ -52,7 +52,11 @@ def main() -> None:
     os.makedirs(run_root)
     out = SP._online_dedup_drive(spark, sf, arrivals, run_root)
     n_dec = out.count()
-    ms = [m for m in SP.LAST_RUN_BATCH_MS if m is not None]
+    ms = [
+        d["triggerExecution"]
+        for d in SP.LAST_QUERY_DURATIONS
+        if d.get("triggerExecution") is not None
+    ]
     deltas = sorted(glob.glob(os.path.join(run_root, "index_delta", "d*")))
     print(f"# {n} batches, {n_dec} decisions, "
           f"{len(deltas)} delta dirs at end (compact_every="

@@ -5,7 +5,7 @@ execution; this tool makes that floor auditable by splitting each contract
 query's wall into:
 
 - build  — Python-side plan construction (the ``queries()`` call),
-- engine — start() → awaitTermination(), further split by the engine's own
+- engine — the drive (start() → processAllAvailable()), split by the engine's own
   durationMs accounting summed over micro-batches
   (triggerExecution ⊇ queryPlanning + walCommit + addBatch + getBatch/
   latestOffset + commitOffsets),
